@@ -161,7 +161,7 @@ HEADLINE = [
     # (computation-equivalent: both engines run BM25 + cosine + fusion)
     "ext_pq_postretrain_query",
     "ext_hybrid_rrf",
-    # round 9: index-backed hard-negative mining (per-query pair_filter
+    # round 9: index-backed hard-negative mining (per-query label mask
     # inside the batched serve) and the recall@k eval panel (LSH approx
     # vs exact ground truth) — both computation-equivalent to their
     # oracles (full probe = the twin's brute force)
@@ -218,9 +218,8 @@ CLOSED_FORM_ORACLE = [
     # at sf0.1 the twin is an in-process cross of <=2k-row tables
     # (0.02-0.08 s of pure arithmetic) while Spark pays a persisted
     # partitioned store's serving plan — the cohort's definitional
-    # case. The real batched-vs-loop and scale comparisons live in
-    # scripts/ann_batch_probe.py / hard_negatives_probe.py and
-    # BASELINE.md's probe tables.
+    # case. The real batched-vs-loop and scale comparisons are
+    # recorded in BASELINE.md's probe tables.
     "ext_ivf_batch_query",
     "ext_pq_batch_query",
     "ext_hard_negatives_ivf",
@@ -232,8 +231,8 @@ CLOSED_FORM_ORACLE = [
     # in-process cross of ~20 query vectors × ~11k passage vectors
     # (0.6 s of pure arithmetic) while Spark serves the persisted
     # IVF-PQ passage store (ADC scan → per-token top-k → exact rerank
-    # → pooling). The real served-vs-exact comparison lives in
-    # scripts/late_interaction_probe.py's scale table.
+    # → pooling). The real served-vs-exact comparison is recorded in
+    # BASELINE.md's late-interaction scale table.
     "ext_late_interaction_topk",
 ]
 

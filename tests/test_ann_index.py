@@ -623,12 +623,21 @@ def test_pq_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
     assert gotr == wantr
 
 
+def _assert_centroid_partition_filter(plan):
+    """The ``assigned`` list scan carries the probe union as a static
+    ``centroid`` partition filter."""
+    scan = plan.index("Scan parquet")
+    assert "assigned" in plan[scan : plan.index("Location:", scan) + 300]
+    lo = plan.index("PartitionFilters", scan)
+    assert "centroid" in plan[lo : lo + 200]
+
+
 def test_ivf_batch_one_plan_with_partition_pruning(spark, sf_dir, tmp_path):
     """The batched serve is ONE action whose job count does NOT grow
     with the query count (the whole point vs the per-query loop), and
-    the inverted-list scan carries a dynamic partition-pruning filter
-    fed by the broadcast probe pairs — the single-query path's
-    partition pruning, preserved under batching."""
+    the inverted-list scan carries the probe union as a static
+    ``centroid`` partition filter — the single-query path's partition
+    pruning, preserved under batching."""
     idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
     ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
@@ -647,10 +656,9 @@ def test_ivf_batch_one_plan_with_partition_pruning(spark, sf_dir, tmp_path):
     n50 = njobs("bat50", index.search_batch(_qframe(emb, 50), k=5, nprobe=3))
     assert n1 == n50, (n1, n50)
     plan = formatted_plan(index.search_batch(_qframe(emb, 50), k=5, nprobe=3))
-    assert "dynamicpruning" in plan
-    # only the inverted lists and the query frame are scanned (the DPP
-    # subquery section re-lists the probe side, so pin locations, not
-    # node counts)
+    _assert_centroid_partition_filter(plan)
+    # only the inverted lists are scanned (the query batch is collected
+    # into the scorer's closure), so pin locations, not node counts
     locs = {
         line.split("[")[1].split("]")[0]
         for line in plan.splitlines()
@@ -984,10 +992,11 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
     spark, sf_dir, tmp_path
 ):
     """Production mining at pruned nprobe: every returned pair still
-    satisfies the different-label predicate (the pair_filter runs
+    satisfies the different-label predicate (the neq_attr mask runs
     inside the serve, not as a post-hoc trim), at most k rows per
-    anchor, and the payload/pair_filter additions leave the batched
-    plan's dynamic partition pruning on the inverted-list scan intact."""
+    anchor, and the payload join leaves the batched plan's static
+    centroid partition filter on the inverted-list scan intact. The
+    mask needs the payload that supplies its list-side column."""
     from uofi_payroll_etl_main_demo_spark.ext.ann_index import (
         hard_negative_mining_index,
     )
@@ -1003,7 +1012,6 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
         emb.select("vec_id", "label"),
         k=3,
         nprobe=2,
-        engine="expression",
     )
     rows = out.collect()
     assert rows
@@ -1014,7 +1022,7 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
     assert all(r["label"] != r["neighbor_label"] for r in rows)
     assert all(r["neighbor_id"] != r["query_id"] for r in rows)
     plan = formatted_plan(out)
-    assert "dynamicpruning" in plan
+    _assert_centroid_partition_filter(plan)
     locs = {
         line.split("[")[1].split("]")[0]
         for line in plan.splitlines()
@@ -1022,50 +1030,17 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
     }
     for loc in locs:
         assert "assigned" in loc or "embeddings" in loc, loc
-
-
-def test_search_batch_pair_filter_composes_with_auto_widen(
-    spark, sf_dir, tmp_path
-):
-    """A starved per-pair predicate (sparse admitted set, k above the
-    per-list match count) widens to full probe and surfaces exactly
-    the admitted brute-force set — the recall backstop holds for
-    pair_filter just as it does for filter_ids."""
-    idx = str(tmp_path / "ivf")
-    emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
-    queries = _qframe(emb, 4)
-    got = sorted(
-        (r["query_id"], r["vec_id"], round(r["score"], 9))
-        for r in index.search_batch(
-            queries,
-            k=40,
-            nprobe=1,
-            pair_filter=F.col("vec_id") % 101 == 7,
-            auto_widen=True,
-        ).collect()
-    )
-    allowed = emb.filter(F.col("vec_id") % 101 == 7)
-    n_allowed = allowed.count()
-    want = []
-    for qr in queries.collect():
-        for r in brute_force_top_k(
-            allowed, list(qr["qvec"]), k=40
-        ).collect():
-            want.append((qr["query_id"], r["vec_id"], round(r["score"], 9)))
-    assert got == sorted(want) and got
-    from collections import Counter
-
-    per_q = Counter(q for q, _v, _s in got)
-    assert all(c == n_allowed for c in per_q.values())
+    with pytest.raises(ValueError, match="list_payload"):
+        index.search_batch(
+            _qframe(emb, 3), k=2, neq_attr=("query_id", "label")
+        )
 
 
 def test_search_batch_gemm_full_probe_is_brute_force(
     spark, sf_dir, tmp_path
 ):
-    """The BLAS batch path at full probe equals the brute force per
-    query (rounded-cosine compare — the GEMM rank law rounds before
+    """The batch scorer at full probe equals the brute force per
+    query (rounded-cosine compare — the rank law rounds before
     ranking), and exclude_query_id drops exactly the self row."""
     idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
@@ -1074,14 +1049,14 @@ def test_search_batch_gemm_full_probe_is_brute_force(
     queries = _qframe(emb, 6)
     got = {
         (r["query_id"], r["vec_id"]): round(r["score"], 6)
-        for r in index.search_batch_gemm(queries, k=5, nprobe=8).collect()
+        for r in index.search_batch(queries, k=5, nprobe=8).collect()
     }
     want = {}
     for qr in queries.collect():
         for r in brute_force_top_k(emb, list(qr["qvec"]), k=5).collect():
             want[(qr["query_id"], r["vec_id"])] = round(r["score"], 6)
     assert got == want and len(got) == 30
-    noself = index.search_batch_gemm(
+    noself = index.search_batch(
         queries, k=5, nprobe=8, exclude_query_id=True
     ).collect()
     assert all(r["vec_id"] != r["query_id"] for r in noself)
@@ -1094,39 +1069,8 @@ def test_search_batch_gemm_full_probe_is_brute_force(
         assert q not in ids and len(ids) == 5
 
 
-def test_search_batch_gemm_matches_expression_path_pruned(
-    spark, sf_dir, tmp_path
-):
-    """Same probe rule, same lists: at the SAME pruned nprobe the GEMM
-    path selects the same (query, vector) pairs with the same rounded
-    scores as the expression path, including under filter_ids — the
-    two implementations are one serving law."""
-    idx = str(tmp_path / "ivf")
-    emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
-    queries = _qframe(emb, 8)
-    for kwargs in (
-        {},
-        {"filter_ids": emb.filter(F.col("label") == 2).select("vec_id")},
-    ):
-        got = {
-            (r["query_id"], r["vec_id"]): round(r["score"], 6)
-            for r in index.search_batch_gemm(
-                queries, k=5, nprobe=3, **kwargs
-            ).collect()
-        }
-        want = {
-            (r["query_id"], r["vec_id"]): round(r["score"], 6)
-            for r in index.search_batch(
-                queries, k=5, nprobe=3, **kwargs
-            ).collect()
-        }
-        assert got == want and got
-
-
 def test_search_batch_gemm_pages_over_cap_batches(spark, sf_dir, tmp_path):
-    """Over-cap GEMM batches page themselves in bounded chunks (the PQ
+    """Over-cap batches page themselves in bounded chunks (the PQ
     serve's paging contract): 10 queries at max_queries=4 run as three
     chunk jobs whose union equals the under-cap serve of the same
     batch at the same full probe. Empty batches still refuse."""
@@ -1143,56 +1087,12 @@ def test_search_batch_gemm_pages_over_cap_batches(spark, sf_dir, tmp_path):
         )
 
     paged = rows(
-        index.search_batch_gemm(queries, k=3, nprobe=4, max_queries=4)
+        index.search_batch(queries, k=3, nprobe=4, max_queries=4)
     )
-    whole = rows(index.search_batch_gemm(queries, k=3, nprobe=4))
+    whole = rows(index.search_batch(queries, k=3, nprobe=4))
     assert paged == whole and len(paged) == 30
     with pytest.raises(ValueError, match="empty query batch"):
-        index.search_batch_gemm(_qframe(emb, 0), k=2)
-
-
-def test_hard_negatives_gemm_engine_matches_expression(
-    spark, sf_dir, tmp_path
-):
-    """One mining law, two engines: at the same pruned nprobe the GEMM
-    engine (neq_attr mask, BLAS partial top-k) selects the same
-    (anchor, neighbor) pairs with the same 6dp cosines as the
-    expression engine (pair_filter Column), labels included."""
-    from uofi_payroll_etl_main_demo_spark.ext.ann_index import (
-        hard_negative_mining_index,
-    )
-
-    idx = str(tmp_path / "ivf")
-    emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
-    anchors = emb.filter(F.col("vec_id") < 12)
-    labels = emb.select("vec_id", "label")
-
-    def rows(engine):
-        return {
-            (
-                r["query_id"],
-                r["neighbor_id"],
-                r["label"],
-                r["neighbor_label"],
-                round(r["cosine"], 6),
-            )
-            for r in hard_negative_mining_index(
-                index, anchors, labels, k=3, nprobe=3, engine=engine
-            ).collect()
-        }
-
-    got_g, got_e = rows("gemm"), rows("expression")
-    assert got_g == got_e and got_g
-    with pytest.raises(ValueError, match="auto_widen"):
-        hard_negative_mining_index(
-            index, anchors, labels, k=3, nprobe=3, auto_widen=True
-        )
-    with pytest.raises(ValueError, match="list_payload"):
-        index.search_batch_gemm(
-            _qframe(emb, 3), k=2, neq_attr=("query_id", "label")
-        )
+        index.search_batch(_qframe(emb, 0), k=2)
 
 
 def test_pq_cosine_mode_exact_identity_and_norm_skew_fix(
@@ -1277,11 +1177,13 @@ def test_search_batch_auto_widen_zero_driver_materialization(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """VERDICT r9 #2 done-criterion: the batched auto-widen loop keeps
-    result rows on the executors — ZERO ``DataFrame.collect()`` /
-    ``SparkSession.createDataFrame`` calls anywhere in the widen serve
-    (per-round outputs localCheckpoint; satisfied/starved sets are
-    broadcast semi/anti joins; loop control is a JVM-side isEmpty
-    probe). A spy trips if driver materialization ever creeps back."""
+    result rows on the executors — ZERO ``SparkSession.createDataFrame``
+    calls and ZERO collects of a scored (``score``-carrying) frame
+    anywhere in the widen serve (per-round outputs localCheckpoint;
+    satisfied/starved sets are broadcast semi/anti joins; loop control
+    is a JVM-side isEmpty probe). The one bounded query-batch collect
+    per round is the scorer's contract. A spy trips if driver
+    materialization of results ever creeps back."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
     idx = str(tmp_path / "ivf")
@@ -1296,7 +1198,8 @@ def test_search_batch_auto_widen_zero_driver_materialization(
     real_create = type(spark).createDataFrame
 
     def spy_collect(self):
-        calls.append("collect")
+        if "score" in self.columns:
+            calls.append("collect")
         return real_collect(self)
 
     def spy_create(self, *a, **kw):
@@ -1502,3 +1405,86 @@ def test_rebuild_over_serving_dir_is_snapshot_safe(spark, sf_dir, tmp_path):
     assert new.meta["epoch"] == old.meta["epoch"] + 1
     got = _rows(new.search(QV, k=10, nprobe=4))
     assert got == _rows(brute_force_top_k(half, QV, k=10))
+
+
+def test_search_batch_rank_law_and_hard_negatives_auto_widen(
+    spark, tmp_path
+):
+    """One rank law for the batch scorer: the key is the cosine rounded
+    to 6 decimals DESC, then id ASC, while the emitted score is the
+    UNROUNDED cosine. Two stored vectors whose cosines to the query
+    round to the same 6dp value (the larger cosine on the larger id)
+    therefore rank by id. Hard-negative mining composes with
+    auto_widen: k above any list's count of different-label vectors
+    starves every anchor through to full probe, where the result is
+    the label-filtered brute force under the same law."""
+    import math
+
+    import numpy as np
+
+    from uofi_payroll_etl_main_demo_spark.ext.ann_index import (
+        hard_negative_mining_index,
+    )
+
+    def unit_x(c):
+        return [c, math.sqrt(1.0 - c * c), 0.0, 0.0]
+
+    rows = [(1, unit_x(0.5000001), 1), (2, unit_x(0.5000003), 1)]
+    rows += [
+        (i, [0.04 * (i - 8), math.cos(i), math.sin(i), 0.5], i % 2)
+        for i in range(3, 15)
+    ]
+    store = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    idx = str(tmp_path / "ivf")
+    ivf_index_build(store, idx, n_centroids=4, corpus_tag="t")
+    index = ivf_index_load(spark, idx)
+
+    def cos(a, b):
+        a, b = np.asarray(a), np.asarray(b)
+        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
+
+    q = [1.0, 0.0, 0.0, 0.0]
+    c1, c2 = cos(rows[0][1], q), cos(rows[1][1], q)
+    assert c1 < c2 and round(c1, 6) == round(c2, 6)
+    qdf = spark.createDataFrame([(0, q)], "query_id long, qvec array<double>")
+    (top,) = index.search_batch(qdf, k=1, nprobe=4).collect()
+    assert top["vec_id"] == 1
+    assert round(top["score"], 9) == round(c1, 9) != round(c2, 9)
+
+    anchors = spark.createDataFrame(
+        [(100, q, 0), (101, [0.0, 1.0, 0.0, 0.0], 1)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    k = len(rows)
+    got = sorted(
+        (
+            r["query_id"],
+            r["rank"],
+            r["neighbor_id"],
+            r["label"],
+            r["neighbor_label"],
+            r["cosine"],
+        )
+        for r in hard_negative_mining_index(
+            index,
+            anchors,
+            store.select("vec_id", "label"),
+            k=k,
+            nprobe=1,
+            auto_widen=True,
+        ).collect()
+    )
+    want = []
+    for aid, avec, alabel in anchors.collect():
+        negs = [(round(cos(v, avec), 6), i, lab)
+                for i, v, lab in rows if lab != alabel]
+        negs.sort(key=lambda t: (-t[0], t[1]))
+        want += [
+            (aid, rank, i, alabel, lab, c)
+            for rank, (c, i, lab) in enumerate(negs[:k], start=1)
+        ]
+    assert got == sorted(want)
+    assert (100, 1, 1, 0, 1, round(c1, 6)) in got  # the tie ranks by id
+    assert (100, 2, 2, 0, 1, round(c2, 6)) in got

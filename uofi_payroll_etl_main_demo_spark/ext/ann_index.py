@@ -1141,47 +1141,6 @@ def ivf_index_build(
     )
 
 
-def _probe_rank_expr(
-    centroids: "list[list[float]]", qvec_col: str, nprobe: int
-):
-    """Column expression ranking the ``nprobe`` nearest centroids for a
-    QUERY-VECTOR COLUMN — the batched twin of ``ext.ivf.rank_centroids``
-    under the SAME law (cosine descending, ties to the lowest centroid
-    id) and the same arithmetic (left-fold dot products, zero norms
-    replaced by 1.0), so a vector ranked by either path probes the
-    same lists bit-for-bit. Returns array<struct<nc,i>> of length
-    ``nprobe`` (``i`` is the centroid id). Interpreted HOF lambdas are
-    fine here: this runs over the QUERIES frame, the small side by
-    contract."""
-    import math
-
-    qarr = F.transform(F.col(qvec_col), lambda x: x.cast("double"))
-    qn = F.sqrt(
-        F.aggregate(
-            F.zip_with(qarr, qarr, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    qden = F.when(qn != 0, qn).otherwise(F.lit(1.0))
-    entries = []
-    for i, c in enumerate(centroids):
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        clit = F.array(*[F.lit(float(x)) for x in c])
-        dot = F.aggregate(
-            F.zip_with(qarr, clit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        entries.append(
-            F.struct(
-                (-(dot / (qden * F.lit(cn)))).alias("nc"),
-                F.lit(i).alias("i"),
-            )
-        )
-    return F.slice(F.array_sort(F.array(*entries)), 1, nprobe)
-
-
 def _relational_auto_widen(
     queries: DataFrame,
     query_id_col: str,
@@ -1322,6 +1281,64 @@ def _paged_batch_serve(
     return res
 
 
+def _bounded_queries(queries: DataFrame, qcols: "list[str]", max_queries: int):
+    """Query intake of the batch scorers, whose per-query state is
+    driver-built: the batch's ``qcols`` rows, at most ``max_queries`` of
+    them — or None for an over-cap batch, which the caller pages through
+    :func:`_paged_batch_serve`. An empty batch refuses."""
+    rows = queries.select(*qcols).limit(max_queries + 1).collect()
+    if len(rows) > max_queries:
+        return None
+    if not rows:
+        raise ValueError("empty query batch")
+    return rows
+
+
+def _query_matrix(rows, query_vec_col: str, dim: int):
+    """(q × dim) float64 matrix of a collected query batch; a query of
+    another dimension than the index refuses."""
+    import numpy as np
+
+    qmat = np.stack(
+        [np.asarray(r[query_vec_col], dtype=np.float64) for r in rows]
+    )
+    if qmat.shape[1] != dim:
+        raise ValueError(f"query dimension {qmat.shape[1]} != index dim {dim}")
+    return qmat
+
+
+def _unit_rows(M):
+    """Row-normalize a float matrix → (unit rows, live mask). Zero rows
+    stay zero: their cosine is undefined, so they score nothing."""
+    import numpy as np
+
+    n = np.linalg.norm(M, axis=1)
+    live = n != 0
+    return M / np.where(live, n, 1.0)[:, None], live
+
+
+def _probe_plan(
+    Qn, centroids: "list[list[float]]", nprobe: int
+) -> "dict[int, list[int]]":
+    """Batched probe ranking shared by the IVF and IVF-PQ batch
+    scorers: the ``rank_centroids`` law (cosine DESC, centroid id ASC
+    — the stable argsort breaks ties by index) as one (q × n_lists)
+    GEMM over the unit query rows ``Qn``. Float near-ties between
+    centroids may order probe lists differently than the scalar rule's
+    sum order; both are valid nprobe prefixes of the same law, and at
+    full probe the distinction vanishes. Returns {centroid: [query row
+    indices probing it]}; zero-norm queries probe nothing."""
+    import numpy as np
+
+    Cn, _ = _unit_rows(np.asarray(centroids, dtype=np.float64))
+    order = np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :nprobe]
+    probes: "dict[int, list[int]]" = {}
+    for qi in np.flatnonzero(Qn.any(axis=1)):
+        for c in order[qi]:
+            probes.setdefault(int(c), []).append(int(qi))
+    return probes
+
+
 class IVFDiskIndex:
     """Loaded handle: centroids on the driver (tiny), lists lazy."""
 
@@ -1354,9 +1371,10 @@ class IVFDiskIndex:
         query_vec_col: str = "qvec",
         filter_ids: DataFrame | None = None,
         auto_widen: bool = False,
+        exclude_query_id: bool = False,
+        max_queries: int = 4096,
         list_payload: DataFrame | None = None,
-        pair_filter=None,
-        carry_cols: tuple = (),
+        neq_attr: "tuple[str, str] | None" = None,
     ) -> DataFrame:
         """BATCHED serving: one Spark job answers EVERY query in
         ``queries`` — the shape a retrieval / hard-negative-mining
@@ -1364,261 +1382,111 @@ class IVFDiskIndex:
         would schedule millions of jobs. Returns (query_id, id, score)
         rows, the per-query top-k.
 
-        Plan shape (pinned in tests/test_ann_index.py): each query
-        ranks its ``nprobe`` nearest centroids JVM-side (the driver-held
-        centroid table as literals — same law as the single-query
-        path, bit-for-bit), explodes to (query, centroid) probe pairs,
-        and BROADCASTS onto the partitioned inverted lists; Spark's
-        dynamic partition pruning turns the broadcast keys into a
-        partition filter on the parquet scan, so only the UNION of
-        probed lists' files is read — the single-query path's pruning,
-        preserved under batching. Per-query top-k is one hash exchange
-        on query_id (row_number window), so the whole serve is:
-        pruned scan → broadcast join → one shuffle. Cost scales with
-        (queries × probed-list rows), never queries × jobs.
+        - SCORING IS BLAS: the query batch collects to a (q × dim)
+          matrix shipped in the Arrow closure (``max_queries`` bounds
+          driver state; bigger batches page themselves in
+          ``max_queries``-sized chunks, one job per chunk, results
+          unioned), and each pruned list partition scores all its
+          probing queries as ONE unit-normalized GEMM.
+        - PARTIAL TOP-K BEFORE THE SHUFFLE: each Arrow chunk emits only
+          its per-query top-k (exact: any global top-k row is top-k
+          within its chunk under the same total order), so the final
+          query_id exchange carries O(chunks × q × k) rows, never the
+          O(probed rows × q) pair frame.
 
-        ``queries`` is the SMALL side by contract (it is broadcast,
-        replicated ×nprobe): serve multi-million-query workloads in
-        bounded chunks of this call. ``filter_ids`` semi-joins the
-        probed lists before any cosine, exactly like :meth:`search`.
+        Probe ranking is :func:`_probe_plan` (the ``rank_centroids``
+        law, vectorized) and the probe union becomes a static
+        ``centroid IN`` partition filter on the list scan, so only the
+        probed lists' files are read.
 
-        ``auto_widen`` is the batched recall backstop (the filtered
-        twin of :meth:`search`'s): queries that return fewer than
-        ``k`` survivors re-run TOGETHER with doubled nprobe — one job
-        per widening round over ONLY the starved queries, at most
-        log2(#lists) rounds, degrading gracefully to the exact
-        filtered brute force at full probe. The loop is fully
-        RELATIONAL (:func:`_relational_auto_widen`): per-round outputs
-        localCheckpoint (bounded: ≤ batch × k rows, executor storage),
-        satisfied/starved sets are broadcast semi/anti joins, and the
-        return value is the lazy union of rounds — no driver collect
-        of result rows.
+        RANK LAW: the key is the cosine rounded to 6 decimals, DESC,
+        then id ASC — BLAS sum order differs from the scalar fold, so
+        rounding before ranking keeps ties engine-exact (the
+        ``knn_join_gemm`` law, and the one the oracle twins encode).
+        The emitted ``score`` is the UNROUNDED cosine, as :meth:`search`
+        emits it. Zero-norm corpus or query vectors have undefined
+        cosine and are never scored (a zero-norm query emits no rows).
 
-        PER-QUERY predicates (the vector-DB filtered-search shape a
-        global ``filter_ids`` can't express — e.g. hard-negative
-        mining's "neighbor label differs from MY label"):
-        ``list_payload`` inner-joins extra per-vector attribute
-        columns onto the (already pruned + semi-filtered) lists by
-        the index id, and ``pair_filter`` — a boolean Column over the
-        joined (query × list-row) frame, which carries ALL query
-        columns — runs BEFORE any cosine and BEFORE the top-k window,
-        so ranks count only admitted pairs (exact semantics, no
-        over-fetch heuristics; the auto-widen backstop composes for
-        starved queries). ``carry_cols`` names pass-through columns
-        (either side) for the output. Callers must keep query/payload
-        column names disjoint from the index's (id, vec, centroid,
-        __batch) columns."""
-        id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
+        ``filter_ids`` semi-joins the probed lists before scoring, as
+        in :meth:`search`. ``exclude_query_id`` drops the candidate
+        whose index id equals the query's id (self-exclusion for
+        corpus-vs-itself evals). ``neq_attr=(query_col, list_col)``
+        drops every candidate whose ``list_col`` value equals the
+        query's ``query_col`` value, inside the chunk and BEFORE the
+        partial top-k (the hard-negative "different label" shape);
+        ``list_payload`` supplies ``list_col``, joined onto the pruned
+        lists by the index id.
+
+        ``auto_widen`` is the batched recall backstop (the twin of
+        :meth:`search`'s): queries that return fewer than ``k`` rows
+        re-run TOGETHER with doubled nprobe — one job per widening
+        round over ONLY the starved queries, at most log2(#lists)
+        rounds, degrading gracefully to the exact (filtered) brute
+        force at full probe. The loop is :func:`_relational_auto_widen`:
+        the return value is the lazy union of the rounds, with no
+        driver collect of result rows."""
+        import numpy as np
+        import pandas as pd
         from pyspark.sql import Window
 
+        id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
+        if neq_attr is not None and list_payload is None:
+            raise ValueError(
+                "neq_attr requires list_payload supplying the "
+                "list-side attribute column"
+            )
         n_lists = len(self.centroids)
         nprobe = min(nprobe, n_lists)
+
+        def serve(qdf: DataFrame, probe: int = nprobe) -> DataFrame:
+            return self.search_batch(
+                qdf,
+                k=k,
+                nprobe=probe,
+                query_id_col=query_id_col,
+                query_vec_col=query_vec_col,
+                filter_ids=filter_ids,
+                exclude_query_id=exclude_query_id,
+                max_queries=max_queries,
+                list_payload=list_payload,
+                neq_attr=neq_attr,
+            )
+
         if auto_widen:
             states = [nprobe]
             while states[-1] < n_lists:
                 states.append(min(states[-1] * 2, n_lists))
-
-            def run_round(remaining, state):
-                return self.search_batch(
-                    remaining,
-                    k=k,
-                    nprobe=state,
-                    query_id_col=query_id_col,
-                    query_vec_col=query_vec_col,
-                    filter_ids=filter_ids,
-                    list_payload=list_payload,
-                    pair_filter=pair_filter,
-                    carry_cols=carry_cols,
-                )
-
             return _relational_auto_widen(
-                queries, query_id_col, query_vec_col, k, run_round, states
+                queries, query_id_col, query_vec_col, k, serve, states
             )
-        ranked = _probe_rank_expr(self.centroids, query_vec_col, nprobe)
-        probes = queries.select(
-            "*", F.explode(ranked).alias("__p")
-        ).select(
-            *queries.columns,
-            F.col("__p.i").alias("centroid"),
-        )
-        lists = self.spark.read.parquet(_data_path(self.index_dir, "assigned", self.meta))
-        if filter_ids is not None:
-            lists = lists.join(
-                filter_ids.select(F.col(id_col)), id_col, "left_semi"
-            )
-        joined = lists.join(F.broadcast(probes), "centroid")
-        if list_payload is not None:
-            # above the probe join so the centroid partition pruning
-            # on the lists scan is untouched by the attribute join
-            joined = joined.join(list_payload, id_col)
-        if pair_filter is not None:
-            joined = joined.filter(pair_filter)
-        scored = joined.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            cosine_similarity(
-                vec_col, query_vec_col, dim=int(self.meta["dim"])
-            ).alias("score"),
-        ).filter(F.col("score").isNotNull())
-        # ^ zero-norm vectors (either side) have undefined cosine —
-        # NULL from cosine_similarity — and are dropped, the contract
-        # the GEMM path documents and the IVFPQ zero-norm
-        # short-circuit shares; without the filter a zero-norm query
-        # would emit k NULL-score rows here but none under auto_widen
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("score"), F.asc(id_col)
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-
-    def search_batch_gemm(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        nprobe: int = 4,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "qvec",
-        filter_ids: DataFrame | None = None,
-        exclude_query_id: bool = False,
-        max_queries: int = 4096,
-        list_payload: DataFrame | None = None,
-        neq_attr: "tuple[str, str] | None" = None,
-    ) -> DataFrame:
-        """:meth:`search_batch`'s COMPUTE-BOUND twin — the scale path
-        when (queries × probed rows) is large enough that per-pair
-        higher-order-function cosines dominate (the same trade
-        knn_join_gemm makes vs knn_join). Two structural differences:
-
-        - SCORING IS BLAS: the bounded query batch collects to a
-          (q × dim) matrix shipped in the Arrow closure (the
-          :meth:`PQDiskIndex.search_batch` LUT contract — ``max_queries``
-          bounds driver state), each pruned list partition scores all
-          its probing queries as ONE unit-normalized GEMM, fused and
-          vectorized instead of 3 interpreted array passes per pair.
-        - PARTIAL TOP-K BEFORE THE SHUFFLE: each Arrow chunk emits only
-          its per-query top-k (exact: any global top-k row is top-k
-          within its chunk under the same total order), so the final
-          exchange carries O(chunks × q × k) rows — NOT the
-          O(probed rows × q) pair frame the expression path windows.
-          At 1000-executor scale this is the difference between
-          shuffling k rows per (query, partition) and shuffling every
-          scored pair.
-
-        Probe ranking runs driver-side through the SAME
-        ``rank_centroids`` rule as single-query serving, and the probe
-        union becomes a static ``centroid IN`` partition filter on the
-        list scan. RANK LAW: cosines are rounded to 6 decimals BEFORE
-        ranking (knn_join_gemm's law — float-sum order differs under
-        BLAS, so rounding, then (score DESC, id ASC), keeps ties and
-        therefore ranks engine-exact); :meth:`search_batch` ranks
-        unrounded — at full probe both select the same vectors, pinned
-        in tests. ``exclude_query_id`` drops the candidate whose index
-        id equals the query's id (self-exclusion for corpus-vs-itself
-        evals). Zero-norm corpus/query vectors have undefined cosine
-        and are dropped from scoring, matching the expression path's
-        null-then-filtered semantics.
-
-        PER-QUERY ATTRIBUTE EXCLUSION (the hard-negative shape,
-        BLAS-side): ``neq_attr=(query_col, list_col)`` drops every
-        candidate whose ``list_col`` value equals the query's
-        ``query_col`` value — the mask applies inside the Arrow chunk
-        BEFORE the partial top-k, so semantics equal the expression
-        path's ``pair_filter`` not-equal predicate. ``list_payload``
-        supplies ``list_col`` (joined onto the pruned lists by the
-        index id). Arbitrary ``pair_filter`` Columns remain an
-        expression-path feature; this path trades that generality for
-        BLAS. Probe ranking vectorizes the shared rank_centroids rule
-        (cosine DESC, centroid id ASC) as one (q × n_lists) GEMM —
-        float near-ties between centroids may rank probe lists
-        differently than the scalar rule's sum order; both are valid
-        nprobe prefixes of the same ordering law, and at full probe
-        the distinction vanishes."""
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import Window
-        from pyspark.sql import types as T
-
-        id_col, vec_col = self.meta["id_col"], self.meta["vec_col"]
-        n_lists = len(self.centroids)
-        nprobe = min(nprobe, n_lists)
         qcols = [query_id_col, query_vec_col]
         if neq_attr is not None:
             qcols.append(neq_attr[0])
-        qrows = queries.select(*qcols).limit(max_queries + 1).collect()
-        if len(qrows) > max_queries:
-            # over-cap batches page themselves in bounded chunks —
-            # one job per chunk, union of results (VERDICT r9 #3); the
-            # per-chunk serve keeps the bounded-driver-state contract
-            del qrows
-            return _paged_batch_serve(
-                queries,
-                qcols,
-                max_queries,
-                lambda cdf: self.search_batch_gemm(
-                    cdf,
-                    k=k,
-                    nprobe=nprobe,
-                    query_id_col=query_id_col,
-                    query_vec_col=query_vec_col,
-                    filter_ids=filter_ids,
-                    exclude_query_id=exclude_query_id,
-                    max_queries=max_queries,
-                    list_payload=list_payload,
-                    neq_attr=neq_attr,
-                ),
-            )
-        if not qrows:
-            raise ValueError("empty query batch")
-        qids = [r[query_id_col] for r in qrows]
-        Q = np.array([list(r[query_vec_col]) for r in qrows], dtype=np.float64)
-        qnorms = np.linalg.norm(Q, axis=1)
-        live = qnorms != 0
-        Qn = np.where(live[:, None], Q / np.where(live, qnorms, 1.0)[:, None], 0.0)
-        qattrs = (
-            np.array([r[neq_attr[0]] for r in qrows])
-            if neq_attr is not None
-            else None
+        qrows = _bounded_queries(queries, qcols, max_queries)
+        if qrows is None:
+            return _paged_batch_serve(queries, qcols, max_queries, serve)
+        qids = np.array([r[query_id_col] for r in qrows])
+        Qn, _ = _unit_rows(
+            _query_matrix(qrows, query_vec_col, int(self.meta["dim"]))
         )
-        # driver-side probe ranking, vectorized: one (q × n_lists) GEMM
-        # applying the shared rank law (cosine DESC, centroid id ASC —
-        # stable argsort breaks ties by index)
-        C = np.asarray(self.centroids, dtype=np.float64)
-        cn = np.linalg.norm(C, axis=1)
-        Cn = C / np.where(cn != 0, cn, 1.0)[:, None]
-        csims = Qn @ Cn.T  # (q, n_lists)
-        order = np.argsort(-csims, axis=1, kind="stable")[:, :nprobe]
-        probes_by_centroid: dict[int, list[int]] = {}
-        for qi in range(len(qids)):
-            if not live[qi]:
-                continue
-            for c in order[qi]:
-                probes_by_centroid.setdefault(int(c), []).append(qi)
-        probe_union = sorted(probes_by_centroid)
-        lists = self.spark.read.parquet(_data_path(self.index_dir, "assigned", self.meta)).filter(
-            F.col("centroid").isin(probe_union)
-        )
+        probes = _probe_plan(Qn, self.centroids, nprobe)
+        lists = self.spark.read.parquet(
+            _data_path(self.index_dir, "assigned", self.meta)
+        ).filter(F.col("centroid").isin(sorted(probes)))
         if filter_ids is not None:
             lists = lists.join(
                 filter_ids.select(F.col(id_col)), id_col, "left_semi"
             )
-        attr_col = None
+        cols = [id_col, vec_col, "centroid"]
+        attr_col = qattrs = None
         if neq_attr is not None:
-            if list_payload is None:
-                raise ValueError(
-                    "neq_attr requires list_payload supplying the "
-                    "list-side attribute column"
-                )
             attr_col = neq_attr[1]
+            qattrs = np.array([r[neq_attr[0]] for r in qrows])
+            cols.append(attr_col)
             lists = lists.join(
                 list_payload.select(F.col(id_col), F.col(attr_col)), id_col
             )
-        qid_arr = np.array(qids)
-        exclude = exclude_query_id
-
+        lists = lists.select(*cols)
         schema = T.StructType(
             [
                 T.StructField(
@@ -1626,69 +1494,61 @@ class IVFDiskIndex:
                 ),
                 T.StructField(id_col, lists.schema[id_col].dataType),
                 T.StructField("score", T.DoubleType()),
+                T.StructField("__rk", T.DoubleType()),
             ]
         )
 
         def score_chunks(batches):
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if not len(pdf):
                     continue
                 ids = pdf[id_col].to_numpy()
                 cents = pdf["centroid"].to_numpy()
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                vnorms = np.linalg.norm(V, axis=1)
-                vlive = vnorms != 0
-                Vn = np.where(
-                    vlive[:, None],
-                    V / np.where(vlive, vnorms, 1.0)[:, None],
-                    0.0,
+                Vn, vlive = _unit_rows(
+                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
                 )
-                attrs = (
-                    pdf[attr_col].to_numpy() if attr_col is not None else None
-                )
-                out_q, out_i, out_s = [], [], []
+                attrs = pdf[attr_col].to_numpy() if attr_col else None
+                out_q, out_i, out_s, out_k = [], [], [], []
                 for c in np.unique(cents):
-                    q_idx = probes_by_centroid.get(int(c))
-                    if not q_idx:
-                        continue
+                    q_idx = probes.get(int(c))
                     rmask = (cents == c) & vlive
-                    if not rmask.any():
+                    if not q_idx or not rmask.any():
                         continue
                     rids = ids[rmask]
                     rattrs = attrs[rmask] if attrs is not None else None
-                    sims = np.round(Vn[rmask] @ Qn[q_idx].T, 6)
+                    sims = Vn[rmask] @ Qn[q_idx].T
+                    keys = np.round(sims, 6)
                     for j, qi in enumerate(q_idx):
-                        col = sims[:, j]
                         keep = np.ones(len(rids), dtype=bool)
-                        if exclude:
-                            keep = rids != qid_arr[qi]
+                        if exclude_query_id:
+                            keep &= rids != qids[qi]
                         if rattrs is not None:
                             keep &= rattrs != qattrs[qi]
-                        if not keep.any():
-                            continue
-                        # top-k by (score desc, id asc): stable lexsort
-                        order = np.lexsort((rids[keep], -col[keep]))[:k]
-                        out_q.extend([qid_arr[qi]] * len(order))
-                        out_i.extend(rids[keep][order])
-                        out_s.extend(col[keep][order])
+                        kid, kkey = rids[keep], keys[keep, j]
+                        # top-k by (key desc, id asc): stable lexsort
+                        top = np.lexsort((kid, -kkey))[:k]
+                        out_q.append(np.full(len(top), qi))
+                        out_i.append(kid[top])
+                        out_s.append(sims[keep, j][top])
+                        out_k.append(kkey[top])
                 if out_q:
                     yield pd.DataFrame(
                         {
-                            query_id_col: out_q,
-                            id_col: out_i,
-                            "score": np.asarray(out_s, dtype=np.float64),
+                            query_id_col: qids[np.concatenate(out_q)],
+                            id_col: np.concatenate(out_i),
+                            "score": np.concatenate(out_s),
+                            "__rk": np.concatenate(out_k),
                         }
                     )
 
-        partial = lists.mapInPandas(score_chunks, schema)
         w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("score"), F.asc(id_col)
+            F.desc("__rk"), F.asc(id_col)
         )
         return (
-            partial.withColumn("__rn", F.row_number().over(w))
+            lists.mapInPandas(score_chunks, schema)
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-            .drop("__rn")
+            .drop("__rn", "__rk")
         )
 
     def search(
@@ -1773,7 +1633,6 @@ def hard_negative_mining_index(
     query_vec_col: str = "embedding",
     label_col: str = "label",
     auto_widen: bool = False,
-    engine: str = "gemm",
 ) -> DataFrame:
     """Hard-negative mining SERVED FROM the persisted IVF store — the
     index-backed form of
@@ -1783,30 +1642,23 @@ def hard_negative_mining_index(
     it already maintains, paying only the probed lists per anchor, and
     training never re-runs.
 
-    One Spark job serves the whole anchor frame
-    (:meth:`IVFDiskIndex.search_batch`): each anchor ranks its
-    ``nprobe`` lists JVM-side, the probe pairs broadcast onto the
-    partition-pruned lists, ``labels`` attributes the candidates, and
-    the different-label predicate runs as a ``pair_filter`` BEFORE the
-    cosine and the per-anchor top-k window — exact per-query filtered
-    semantics, no over-fetch heuristics. Full probe makes every answer
-    exactly the label-filtered brute force (the value-oracle law);
-    ``auto_widen=True`` adds the starved-anchor recall backstop at
-    production nprobe.
+    One batched serve answers the whole anchor frame
+    (:meth:`IVFDiskIndex.search_batch`): ``labels`` attributes the
+    pruned list rows, and the different-label predicate is the
+    scorer's in-chunk ``neq_attr`` mask, applied BEFORE the per-anchor
+    partial top-k — exact per-query filtered semantics, no over-fetch
+    heuristics. Ranks follow the scorer's law (cosine rounded to 6
+    decimals DESC, neighbor id ASC), and so does the final ``rank``
+    window. Full probe makes every answer exactly the label-filtered
+    brute force (the value-oracle law); ``auto_widen=True`` adds the
+    starved-anchor recall backstop at production nprobe.
 
-    ``queries``: (id, vec, label) anchors — the SMALL broadcast side
-    by the batch-serving contract (chunk multi-million-anchor runs).
+    ``queries``: (id, vec, label) anchors, collected in bounded
+    batches by the scorer's ``max_queries`` contract.
     ``labels``: (index-id, label) for the INDEXED corpus (joined by the
     index's id column — a co-keyed shuffle join, corpus-sized is fine).
     Output: (query_id, label, neighbor_id, neighbor_label, cosine,
     rank) — the inline miner's contract.
-
-    ``engine``: ``"gemm"`` (default — the compute-bound scale path:
-    BLAS scoring, per-chunk partial top-k, the different-label
-    predicate as an in-chunk ``neq_attr`` mask; ranks follow the GEMM
-    rounded-cosine law, and the bounded-anchor-batch contract applies)
-    or ``"expression"`` (JVM Column path: unbounded anchor frame,
-    composes with ``auto_widen``, ranks on unrounded scores).
     """
     from pyspark.sql import Window
 
@@ -1819,45 +1671,26 @@ def hard_negative_mining_index(
     payload = labels.select(
         F.col(id_col), F.col(label_col).alias("__n_label")
     )
-    if engine == "gemm":
-        if auto_widen:
-            raise ValueError(
-                "auto_widen composes with engine='expression' only"
-            )
-        hits = index.search_batch_gemm(
-            q,
-            k=k,
-            nprobe=nprobe,
-            list_payload=payload,
-            neq_attr=("__q_label", "__n_label"),
-        )
-        out = hits.join(payload, id_col).join(
-            F.broadcast(q.select("query_id", "__q_label")), "query_id"
-        )
-    elif engine == "expression":
-        out = index.search_batch(
-            q,
-            k=k,
-            nprobe=nprobe,
-            list_payload=payload,
-            pair_filter=F.col("__q_label") != F.col("__n_label"),
-            carry_cols=("__q_label", "__n_label"),
-            auto_widen=auto_widen,
-        )
-    else:
-        raise ValueError(f"unknown engine {engine!r}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc(id_col)
+    hits = index.search_batch(
+        q,
+        k=k,
+        nprobe=nprobe,
+        auto_widen=auto_widen,
+        list_payload=payload,
+        neq_attr=("__q_label", "__n_label"),
     )
+    cosine = F.round("score", 6)
+    w = Window.partitionBy("query_id").orderBy(cosine.desc(), F.asc(id_col))
     return (
-        out.withColumn("rank", F.row_number().over(w))
+        hits.join(payload, id_col)
+        .join(F.broadcast(q.select("query_id", "__q_label")), "query_id")
         .select(
             F.col("query_id"),
             F.col("__q_label").alias("label"),
             F.col(id_col).alias("neighbor_id"),
             F.col("__n_label").alias("neighbor_label"),
-            F.round("score", 6).alias("cosine"),
-            "rank",
+            cosine.alias("cosine"),
+            F.row_number().over(w).alias("rank"),
         )
     )
 
@@ -2120,6 +1953,86 @@ def _pq_encode(
     )
 
 
+# per-query within-chunk ADC candidates, emitted by the PQ / IVF-PQ scans
+_ADC_SCHEMA = T.StructType(
+    [
+        T.StructField("__qi", T.IntegerType()),
+        T.StructField("vec_id_out", T.LongType()),
+        T.StructField("adc", T.DoubleType()),
+    ]
+)
+
+
+def _top_per_query(df: DataFrame, n: int, nq: int, *order) -> DataFrame:
+    """Each query's (``__qi``) top ``n`` rows under ``order``: a
+    row_number window over ``__qi``. A one-query batch (``nq == 1``)
+    takes one global top-n instead — a single top-k stage with no
+    exchange, which keeps a single-query serve as cheap as a plain
+    ``orderBy().limit()``; ``limit`` takes an int32, so budgets above
+    the widen schedule's uncut 2^30 keep the window."""
+    from pyspark.sql import Window
+
+    if nq == 1 and n <= 1 << 30:
+        return df.orderBy(*order).limit(n)
+    w = Window.partitionBy("__qi").orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .drop("__rn")
+    )
+
+
+def _adc_serve(
+    index,
+    queries: DataFrame,
+    qrows,
+    qmat,
+    scanned: DataFrame,
+    *,
+    k: int,
+    candidates: int,
+    rerank_corpus: "DataFrame | None",
+    query_id_col: str,
+) -> DataFrame:
+    """Shared tail of the PQ and IVF-PQ batch scorers: ``scanned`` (the
+    Arrow ADC scan's per-query within-chunk candidates, ``_ADC_SCHEMA``)
+    → one ``__qi`` exchange keeping each query's top ``candidates``
+    (adc DESC, id ASC) → the raw ADC top-k as (query_id, id, score),
+    or the exact rerank of the candidates (:func:`_exact_rerank_batch`)."""
+    id_col = index.meta["id_col"]
+    qid_frame = index.spark.createDataFrame(
+        [(i, r[query_id_col]) for i, r in enumerate(qrows)],
+        T.StructType(
+            [
+                T.StructField("__qi", T.IntegerType()),
+                T.StructField(
+                    query_id_col, queries.schema[query_id_col].dataType
+                ),
+            ]
+        ),
+    )
+    keep = candidates if rerank_corpus is not None else min(candidates, k)
+    cand = _top_per_query(
+        scanned, keep, len(qrows), F.desc("adc"), F.asc("vec_id_out")
+    )
+    if rerank_corpus is None:
+        return cand.join(F.broadcast(qid_frame), "__qi").select(
+            F.col(query_id_col),
+            F.col("vec_id_out").alias(id_col),
+            F.col("adc").alias("score"),
+        )
+    return _exact_rerank_batch(
+        cand,
+        rerank_corpus,
+        qmat,
+        qid_frame,
+        id_col=id_col,
+        vec_col=index.meta["vec_col"],
+        query_id_col=query_id_col,
+        k=k,
+    )
+
+
 def _exact_rerank_batch(
     cand: DataFrame,
     rerank_corpus: DataFrame,
@@ -2142,18 +2055,15 @@ def _exact_rerank_batch(
     vectorized ACROSS rows (acc += v_d*q_d per dimension), which is
     bit-identical to the JVM zip_with/aggregate fold (strict IEEE
     add/mul, no FMA, same order), so scores — and therefore ranks,
-    which stay on the unrounded value — match the single-query
-    expression path exactly (pinned at 9 decimals in tests). Zero-norm
-    candidates have undefined cosine and are dropped (the expression
-    path NULLs them below every real score; they could differ only
-    when a query has fewer than k real-scored candidates).
+    which stay on the unrounded value — match the ``cosine_similarity``
+    expression exactly (pinned at 9 decimals in tests). Zero-norm
+    candidates have undefined cosine and are dropped. ``qmat`` holds
+    the RAW query vectors, also in cosine mode.
 
     ``cand`` must carry (__qi int, vec_id_out) — the per-query
     candidate frame the ADC stage produced; ``qmat`` is the (nq × dim)
     query matrix whose row index IS ``__qi``."""
     import numpy as np
-
-    from pyspark.sql import Window
 
     nq, dim = qmat.shape
     Qm = qmat
@@ -2204,14 +2114,14 @@ def _exact_rerank_batch(
                 }
             )
 
-    wr = Window.partitionBy("__qi").orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
     return (
-        ids.join(fetched, id_col)
-        .mapInPandas(rescore, rs_schema)
-        .withColumn("__rn", F.row_number().over(wr))
-        .filter(F.col("__rn") <= k)
+        _top_per_query(
+            ids.join(fetched, id_col).mapInPandas(rescore, rs_schema),
+            k,
+            nq,
+            F.desc("score"),
+            F.asc(id_col),
+        )
         .join(F.broadcast(qid_frame), "__qi")
         .select(F.col(query_id_col), F.col(id_col), F.col("score"))
     )
@@ -2318,6 +2228,28 @@ def pq_index_build(
     )
 
 
+def _serve_one(index, query_vec, k: int, **kwargs) -> DataFrame:
+    """Single-query serve of the PQ and IVF-PQ stores: the store's own
+    ``search_batch`` over a one-row query frame, projected to
+    (id, score) and ordered score DESC, id ASC — one scorer per store,
+    so a single query and a batch row can never disagree. The batch
+    holds at most ``k`` rows; the ``limit`` only makes the final sort
+    one top-k stage instead of a range-partitioned sort."""
+    id_col = index.meta["id_col"]
+    q = index.spark.createDataFrame(
+        [(0, [float(x) for x in query_vec])],
+        "__qid long, __qvec array<double>",
+    )
+    return (
+        index.search_batch(
+            q, k=k, query_id_col="__qid", query_vec_col="__qvec", **kwargs
+        )
+        .select(id_col, "score")
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 class PQDiskIndex:
     """Loaded handle: codebooks on the driver (m·n_centroids·sub
     doubles — KBs), codes lazy."""
@@ -2344,81 +2276,24 @@ class PQDiskIndex:
         rerank_corpus: DataFrame | None = None,
         filter_ids: DataFrame | None = None,
     ) -> DataFrame:
-        """ADC scan over the persisted codes (no corpus touch, no
-        training): ``adc[v] = Σ_j lut[j, codes[v][j]]`` with the lookup
-        table built driver-side from the loaded codebooks. With
-        ``rerank_corpus`` (the id-addressable row store), the top
-        ``candidates`` are exact-reranked by true cosine — the standard
-        two-stage serving path; without it, returns the raw ADC scores
-        (pure index-only query). ``filter_ids`` (an id frame from any
-        metadata filter) semi-joins the codes BEFORE the ADC scan, so
-        excluded vectors never consume lookup work and the candidate
-        budget is spent entirely inside the allowed set — the filtered
-        twin of ``IVFDiskIndex.search``.
-        """
-        import numpy as np
-
-        meta = self.meta
-        m = meta["m"]
-        sub = meta["dim"] // m
-        q = np.asarray(query_vec, dtype=np.float64)
-        if meta.get("normalized"):
-            # cosine mode: the stored space is unit-normalized, so the
-            # query joins it — IP-ADC ≡ cosine-ADC
-            qn = float(np.linalg.norm(q))
-            if qn:
-                q = q / qn
-        lut = np.einsum("jd,jcd->jc", q.reshape(m, sub), self.codebooks)
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id_out", T.LongType()),
-                T.StructField("adc", T.DoubleType()),
-            ]
+        """Single-query serve: :meth:`search_batch` over a one-row
+        query frame, projected to (id, score) and ordered score DESC,
+        id ASC. ADC scan over the persisted codes (no corpus touch, no
+        training); with ``rerank_corpus`` (the id-addressable row
+        store) the top ``candidates`` are exact-reranked by true cosine
+        — the standard two-stage serving path; without it, the raw ADC
+        scores (pure index-only query). ``filter_ids`` semi-joins the
+        codes BEFORE the ADC scan, so the candidate budget is spent
+        entirely inside the allowed set — the filtered twin of
+        ``IVFDiskIndex.search``."""
+        return _serve_one(
+            self,
+            query_vec,
+            k=k,
+            candidates=candidates,
+            rerank_corpus=rerank_corpus,
+            filter_ids=filter_ids,
         )
-
-        def scan(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-                adc = lut[np.arange(m)[None, :], codes].sum(axis=1)
-                top = np.argsort(-adc)[:candidates]
-                yield pd.DataFrame(
-                    {
-                        "vec_id_out": pdf[id_col].to_numpy()[top],
-                        "adc": adc[top],
-                    }
-                )
-
-        codes_df = self.spark.read.parquet(_data_path(self.index_dir, "codes", self.meta))
-        if filter_ids is not None:
-            codes_df = codes_df.join(
-                filter_ids.select(F.col(id_col)), id_col, "left_semi"
-            )
-        cand = (
-            codes_df.mapInPandas(scan, schema)
-            .orderBy(F.desc("adc"), F.asc("vec_id_out"))
-            .limit(candidates)
-        )
-        if rerank_corpus is None:
-            return cand.select(
-                F.col("vec_id_out").alias(id_col), F.col("adc").alias("score")
-            ).limit(k)
-        ids = cand.select(F.col("vec_id_out").alias(id_col))
-        return (
-            rerank_corpus.join(F.broadcast(ids), id_col, "left_semi")
-            .select(
-                F.col(id_col),
-                cosine_similarity(vec_col, query_vec).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
-
 
     def search_batch(
         self,
@@ -2453,25 +2328,16 @@ class PQDiskIndex:
         set, per query."""
         import numpy as np
 
-        from pyspark.sql import Window
-
         meta = self.meta
-        m = meta["m"]
+        m, n_centroids = meta["m"], meta["n_centroids"]
         sub = meta["dim"] // m
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
-        qrows = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(max_queries + 1)
-            .collect()
-        )
-        if len(qrows) > max_queries:
-            # over-cap batches page themselves in bounded chunks —
-            # one job per chunk, union of results (VERDICT r9 #3); the
-            # per-query LUT tensor stays driver-bounded per chunk
-            del qrows
+        id_col = meta["id_col"]
+        qcols = [query_id_col, query_vec_col]
+        qrows = _bounded_queries(queries, qcols, max_queries)
+        if qrows is None:
             return _paged_batch_serve(
                 queries,
-                [query_id_col, query_vec_col],
+                qcols,
                 max_queries,
                 lambda cdf: self.search_batch(
                     cdf,
@@ -2484,43 +2350,19 @@ class PQDiskIndex:
                     max_queries=max_queries,
                 ),
             )
-        if not qrows:
-            raise ValueError("empty query batch")
-        qids = [r[query_id_col] for r in qrows]
-        qmat = np.stack(
-            [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
-        )
-        if qmat.shape[1] != meta["dim"]:
-            raise ValueError(
-                f"query dimension {qmat.shape[1]} != index dim {meta['dim']}"
-            )
-        nq = len(qids)
-        if meta.get("normalized"):
-            # cosine mode: queries join the unit-normalized store space
-            # for the ADC; the exact rerank scores TRUE cosine of the
-            # raw vectors (scale-invariant), unchanged at full margin
-            qn_ = np.linalg.norm(qmat, axis=1)
-            qmat = np.where(
-                (qn_ != 0)[:, None],
-                qmat / np.where(qn_ != 0, qn_, 1.0)[:, None],
-                qmat,
-            )
+        qmat = _query_matrix(qrows, query_vec_col, meta["dim"])
+        nq = len(qmat)
+        # cosine mode: queries join the unit-normalized store space for
+        # the ADC; the exact rerank scores TRUE cosine of the raw
+        # vectors (scale-invariant), unchanged at full margin
+        qadc = _unit_rows(qmat)[0] if meta.get("normalized") else qmat
         # luts[q, j, c] = <q_sub_j, codebook[j, c]>; flattened so the
         # scan's gather is one fancy-index over (j*n_centroids + code)
-        luts = np.einsum("qjd,jcd->qjc", qmat.reshape(nq, m, sub),
-                         self.codebooks)
-        n_centroids = meta["n_centroids"]
-        lut_flat = luts.reshape(nq, m * n_centroids)
+        lut_flat = np.einsum(
+            "qjd,jcd->qjc", qadc.reshape(nq, m, sub), self.codebooks
+        ).reshape(nq, m * n_centroids)
         offsets = (np.arange(m) * n_centroids).astype(np.int64)
         take = min(candidates, 1 << 30)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("__qi", T.IntegerType()),
-                T.StructField("vec_id_out", T.LongType()),
-                T.StructField("adc", T.DoubleType()),
-            ]
-        )
 
         def scan(batches):
             import pandas as pd
@@ -2546,48 +2388,23 @@ class PQDiskIndex:
                     }
                 )
 
-        codes_df = self.spark.read.parquet(_data_path(self.index_dir, "codes", self.meta))
+        codes_df = self.spark.read.parquet(
+            _data_path(self.index_dir, "codes", self.meta)
+        )
         if filter_ids is not None:
             codes_df = codes_df.join(
                 filter_ids.select(F.col(id_col)), id_col, "left_semi"
             )
-        qid_frame = self.spark.createDataFrame(
-            [(int(i), qid) for i, qid in enumerate(qids)],
-            T.StructType(
-                [
-                    T.StructField("__qi", T.IntegerType()),
-                    T.StructField(
-                        query_id_col,
-                        queries.schema[query_id_col].dataType,
-                    ),
-                ]
-            ),
-        )
-        wq = Window.partitionBy("__qi").orderBy(
-            F.desc("adc"), F.asc("vec_id_out")
-        )
-        keep = candidates if rerank_corpus is not None else min(candidates, k)
-        cand = (
-            codes_df.mapInPandas(scan, out_schema)
-            .withColumn("__rn", F.row_number().over(wq))
-            .filter(F.col("__rn") <= keep)
-            .drop("__rn")
-        )
-        if rerank_corpus is None:
-            return cand.join(F.broadcast(qid_frame), "__qi").select(
-                F.col(query_id_col),
-                F.col("vec_id_out").alias(id_col),
-                F.col("adc").alias("score"),
-            )
-        return _exact_rerank_batch(
-            cand,
-            rerank_corpus,
+        return _adc_serve(
+            self,
+            queries,
+            qrows,
             qmat,
-            qid_frame,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
+            codes_df.mapInPandas(scan, _ADC_SCHEMA),
             k=k,
+            candidates=candidates,
+            rerank_corpus=rerank_corpus,
+            query_id_col=query_id_col,
         )
 
 
@@ -2965,7 +2782,7 @@ def ivfpq_index_build(
     candidate cut is cosine-faithful — without it the ADC ranks by raw
     inner product, and under norm variance a small candidate budget
     can crowd out cosine-true neighbors with high-norm distractors
-    (measured in scripts/ivfpq_probe.py). Full-margin reranked
+    (recorded in BASELINE.md's IVF-PQ table). Full-margin reranked
     serving is exact either way (the rerank reads the RAW corpus);
     the flag changes what the bounded-budget approximation preserves.
     Part of the index identity (ensure-loads match on it)."""
@@ -3117,138 +2934,26 @@ class IVFPQDiskIndex:
         filter_ids: "DataFrame | None" = None,
         auto_widen: bool = False,
     ) -> DataFrame:
-        """Pruned ADC over the probed lists ONLY: the ``centroid isin``
-        probe filter is a PARTITION filter on the codes scan (the IVF
-        store's pruning, at PQ bytes), and the ADC is the residual
-        decomposition — per-list coarse term ``<q, centroid>`` plus the
-        list-independent residual LUT sum. Probe ranking runs through
-        the ONE ``rank_centroids`` rule every IVF engine shares. With
-        ``rerank_corpus`` the top ``candidates`` exact-rerank by true
-        cosine (two-stage serving); full probe + full margin equals the
-        brute force exactly — the whole composed lifecycle's value
-        oracle. ``filter_ids`` semi-joins the pruned codes BEFORE the
-        ADC, the filtered-serving contract of both parent stores.
-
-        ``auto_widen`` is the filtered-ANN recall backstop the parents
-        share: fewer than ``k`` survivors doubles nprobe AND the
-        candidate budget (a selective predicate can starve either the
-        probe set or the ADC cut) until k are found or every list has
-        been probed with an uncut candidate margin — degrading
-        gracefully to the exact filtered brute force when
-        ``rerank_corpus`` is supplied."""
-        import numpy as np
-
-        from uofi_payroll_etl_main_demo_spark.ext.ivf import rank_centroids
-
-        meta = self.meta
-        m = meta["m"]
-        sub = meta["dim"] // m
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
-        n_lists = len(self.centroids)
-        nprobe = min(nprobe, n_lists)
-        q = np.asarray(query_vec, dtype=np.float64)
-        if not np.linalg.norm(q):
-            # zero-norm query: cosine is undefined — emit NO rows, the
-            # same contract as the batched paths' live mask (without
-            # this, rank_centroids' `or 1.0` fallback would probe
-            # lists and return k zero-ADC rows; under auto_widen the
-            # inconsistency forces pointless widen-to-exhaustion)
-            return (
-                self.spark.read.parquet(_data_path(self.index_dir, "codes", self.meta))
-                .select(
-                    F.col(id_col),
-                    F.lit(None).cast("double").alias("score"),
-                )
-                .filter(F.lit(False))
-            )
-        if meta.get("normalized"):
-            # cosine mode: the stored space is unit-normalized, so the
-            # query joins it — IP-ADC ≡ cosine-ADC (probe ranking is
-            # cosine already, scale-invariant)
-            qn = float(np.linalg.norm(q))
-            if qn:
-                q = q / qn
-        lut = np.einsum("jd,jcd->jc", q.reshape(m, sub), self.codebooks)
-        C = np.asarray(self.centroids, dtype=np.float64)
-        qdotc = C @ q  # coarse term per list
-
-        schema = T.StructType(
-            [
-                T.StructField("vec_id_out", T.LongType()),
-                T.StructField("adc", T.DoubleType()),
-            ]
+        """Single-query serve: :meth:`search_batch` over a one-row
+        query frame, projected to (id, score) and ordered score DESC,
+        id ASC. Pruned ADC over the probed lists ONLY (the ``centroid``
+        probe filter is a PARTITION filter on the codes scan — the IVF
+        store's pruning, at PQ bytes), with optional exact rerank of
+        the top ``candidates``; full probe + full margin equals the
+        brute force exactly. ``filter_ids`` semi-joins the pruned codes
+        BEFORE the ADC. ``auto_widen`` doubles nprobe, then lifts the
+        candidate budget, until ``k`` rows survive or the serve is the
+        exact filtered brute force (a zero-norm query emits no rows)."""
+        return _serve_one(
+            self,
+            query_vec,
+            k=k,
+            nprobe=nprobe,
+            candidates=candidates,
+            rerank_corpus=rerank_corpus,
+            filter_ids=filter_ids,
+            auto_widen=auto_widen,
         )
-
-        while True:
-            probe = rank_centroids(self.centroids, query_vec, nprobe)
-            take = candidates
-
-            def scan(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    codes = np.stack(pdf["codes"].to_numpy()).astype(
-                        np.int64
-                    )
-                    cents = pdf["centroid"].to_numpy().astype(np.int64)
-                    adc = (
-                        qdotc[cents]
-                        + lut[np.arange(m)[None, :], codes].sum(axis=1)
-                    )
-                    top = np.argsort(-adc)[:take]
-                    yield pd.DataFrame(
-                        {
-                            "vec_id_out": pdf[id_col].to_numpy()[top],
-                            "adc": adc[top],
-                        }
-                    )
-
-            codes_df = self.spark.read.parquet(
-                _data_path(self.index_dir, "codes", self.meta)
-            ).filter(F.col("centroid").isin(*probe))
-            if filter_ids is not None:
-                codes_df = codes_df.join(
-                    filter_ids.select(F.col(id_col)), id_col, "left_semi"
-                )
-            cand = (
-                codes_df.mapInPandas(scan, schema)
-                .orderBy(F.desc("adc"), F.asc("vec_id_out"))
-                .limit(candidates)
-            )
-            if rerank_corpus is None:
-                out = cand.select(
-                    F.col("vec_id_out").alias(id_col),
-                    F.col("adc").alias("score"),
-                ).limit(k)
-            else:
-                ids = cand.select(F.col("vec_id_out").alias(id_col))
-                out = (
-                    rerank_corpus.join(F.broadcast(ids), id_col, "left_semi")
-                    .select(
-                        F.col(id_col),
-                        cosine_similarity(vec_col, query_vec).alias(
-                            "score"
-                        ),
-                    )
-                    .orderBy(F.desc("score"), F.asc(id_col))
-                    .limit(k)
-                )
-            if not auto_widen:
-                return out
-            # materialize ONCE and hand back a local frame (the IVF
-            # auto-widen contract: take(k) already ran the scored scan)
-            rows = out.take(k)
-            if len(rows) >= k or (
-                nprobe >= n_lists and candidates >= (1 << 30)
-            ):
-                return self.spark.createDataFrame(rows, out.schema)
-            nprobe = min(nprobe * 2, n_lists)
-            if nprobe >= n_lists:
-                # lists exhausted: the remaining starvation can only be
-                # the ADC candidate cut — lift it entirely
-                candidates = 1 << 30
 
     def search_batch(
         self,
@@ -3283,24 +2988,33 @@ class IVFPQDiskIndex:
         by ``max_queries`` — the driver-state contract); the codes
         scan is pruned to the probe union as a static partition
         filter, and inside each Arrow chunk every centroid group
-        scores ONLY the queries that probed it. Probe ranking is the
-        vectorized ``rank_centroids`` law (one GEMM — float near-ties
-        may order probe lists differently than the scalar rule; both
-        are valid nprobe prefixes of the same ordering, identical at
-        full probe, the ``search_batch_gemm`` contract). Per-query
+        scores ONLY the queries that probed it. Probe ranking is
+        :func:`_probe_plan`, shared with the IVF batch scorer. Per-query
         within-chunk top-``candidates`` bounds the exchange to
         O(chunks × q × candidates) rows; optional exact rerank is the
         shared :func:`_exact_rerank_batch` tail."""
         import numpy as np
 
-        from pyspark.sql import Window
-
         meta = self.meta
-        m = meta["m"]
+        m, n_centroids = meta["m"], meta["n_centroids"]
         sub = meta["dim"] // m
-        id_col, vec_col = meta["id_col"], meta["vec_col"]
+        id_col = meta["id_col"]
         n_lists = len(self.centroids)
         nprobe = min(nprobe, n_lists)
+
+        def serve(qdf: DataFrame, state=(nprobe, candidates)) -> DataFrame:
+            return self.search_batch(
+                qdf,
+                k=k,
+                nprobe=state[0],
+                candidates=state[1],
+                rerank_corpus=rerank_corpus,
+                filter_ids=filter_ids,
+                query_id_col=query_id_col,
+                query_vec_col=query_vec_col,
+                max_queries=max_queries,
+            )
+
         if auto_widen:
             # widening schedule: double nprobe to full probe, then —
             # the composed store's second leg — lift the ADC candidate
@@ -3313,106 +3027,29 @@ class IVFPQDiskIndex:
                 states.append((p, candidates))
             if candidates < (1 << 30):
                 states.append((n_lists, 1 << 30))
-
-            def run_round(remaining, state):
-                p_r, cand_r = state
-                return self.search_batch(
-                    remaining,
-                    k=k,
-                    nprobe=p_r,
-                    candidates=cand_r,
-                    rerank_corpus=rerank_corpus,
-                    filter_ids=filter_ids,
-                    query_id_col=query_id_col,
-                    query_vec_col=query_vec_col,
-                    max_queries=max_queries,
-                )
-
             return _relational_auto_widen(
-                queries, query_id_col, query_vec_col, k, run_round, states
+                queries, query_id_col, query_vec_col, k, serve, states
             )
-        qrows = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(max_queries + 1)
-            .collect()
-        )
-        if len(qrows) > max_queries:
-            # over-cap batches page themselves in bounded chunks —
-            # one job per chunk, union of results (VERDICT r9 #3); the
-            # per-query LUT tensor stays driver-bounded per chunk
-            del qrows
-            return _paged_batch_serve(
-                queries,
-                [query_id_col, query_vec_col],
-                max_queries,
-                lambda cdf: self.search_batch(
-                    cdf,
-                    k=k,
-                    nprobe=nprobe,
-                    candidates=candidates,
-                    rerank_corpus=rerank_corpus,
-                    filter_ids=filter_ids,
-                    query_id_col=query_id_col,
-                    query_vec_col=query_vec_col,
-                    max_queries=max_queries,
-                ),
-            )
-        if not qrows:
-            raise ValueError("empty query batch")
-        qids = [r[query_id_col] for r in qrows]
-        qmat = np.stack(
-            [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
-        )
-        if qmat.shape[1] != meta["dim"]:
-            raise ValueError(
-                f"query dimension {qmat.shape[1]} != index dim {meta['dim']}"
-            )
-        nq = len(qids)
-        if meta.get("normalized"):
-            # cosine mode: queries join the unit-normalized store space
-            # for the ADC; the exact rerank still scores TRUE cosine of
-            # the raw vectors (scale-invariant), so results are
-            # unchanged at full margin
-            qn_ = np.linalg.norm(qmat, axis=1)
-            qmat = np.where(
-                (qn_ != 0)[:, None],
-                qmat / np.where(qn_ != 0, qn_, 1.0)[:, None],
-                qmat,
-            )
-        n_centroids = meta["n_centroids"]
-        luts = np.einsum(
-            "qjd,jcd->qjc", qmat.reshape(nq, m, sub), self.codebooks
-        )
-        lut_flat = luts.reshape(nq, m * n_centroids)
+        qcols = [query_id_col, query_vec_col]
+        qrows = _bounded_queries(queries, qcols, max_queries)
+        if qrows is None:
+            return _paged_batch_serve(queries, qcols, max_queries, serve)
+        qmat = _query_matrix(qrows, query_vec_col, meta["dim"])
+        nq = len(qmat)
+        Qn, _ = _unit_rows(qmat)
+        # cosine mode: queries join the unit-normalized store space for
+        # the ADC; the exact rerank scores TRUE cosine of the raw
+        # vectors (scale-invariant), so results are unchanged at full
+        # margin
+        qadc = Qn if meta.get("normalized") else qmat
+        lut_flat = np.einsum(
+            "qjd,jcd->qjc", qadc.reshape(nq, m, sub), self.codebooks
+        ).reshape(nq, m * n_centroids)
         offsets = (np.arange(m) * n_centroids).astype(np.int64)
         C = np.asarray(self.centroids, dtype=np.float64)
-        qdotc = qmat @ C.T  # (nq, n_lists) coarse terms
-        # vectorized probe ranking under the shared rank law (cosine
-        # DESC, centroid id ASC — stable argsort breaks ties by index)
-        qnorms = np.linalg.norm(qmat, axis=1)
-        live = qnorms != 0
-        Qn = np.where(
-            live[:, None], qmat / np.where(live, qnorms, 1.0)[:, None], 0.0
-        )
-        cn = np.linalg.norm(C, axis=1)
-        Cn = C / np.where(cn != 0, cn, 1.0)[:, None]
-        order = np.argsort(-(Qn @ Cn.T), axis=1, kind="stable")[:, :nprobe]
-        probes_by_centroid: "dict[int, list[int]]" = {}
-        for qi in range(nq):
-            if not live[qi]:
-                continue
-            for c in order[qi]:
-                probes_by_centroid.setdefault(int(c), []).append(qi)
-        probe_union = sorted(probes_by_centroid)
+        qdotc = qadc @ C.T  # (nq, n_lists) coarse terms
+        probes_by_centroid = _probe_plan(Qn, self.centroids, nprobe)
         take = min(candidates, 1 << 30)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("__qi", T.IntegerType()),
-                T.StructField("vec_id_out", T.LongType()),
-                T.StructField("adc", T.DoubleType()),
-            ]
-        )
 
         def scan(batches):
             import pandas as pd
@@ -3453,50 +3090,23 @@ class IVFPQDiskIndex:
                         }
                     )
 
-        codes_df = self.spark.read.parquet(_data_path(self.index_dir, "codes", self.meta)).filter(
-            F.col("centroid").isin(probe_union)
-        )
+        codes_df = self.spark.read.parquet(
+            _data_path(self.index_dir, "codes", self.meta)
+        ).filter(F.col("centroid").isin(sorted(probes_by_centroid)))
         if filter_ids is not None:
             codes_df = codes_df.join(
                 filter_ids.select(F.col(id_col)), id_col, "left_semi"
             )
-        qid_frame = self.spark.createDataFrame(
-            [(int(i), qid) for i, qid in enumerate(qids)],
-            T.StructType(
-                [
-                    T.StructField("__qi", T.IntegerType()),
-                    T.StructField(
-                        query_id_col,
-                        queries.schema[query_id_col].dataType,
-                    ),
-                ]
-            ),
-        )
-        wq = Window.partitionBy("__qi").orderBy(
-            F.desc("adc"), F.asc("vec_id_out")
-        )
-        keep = candidates if rerank_corpus is not None else min(candidates, k)
-        cand = (
-            codes_df.mapInPandas(scan, out_schema)
-            .withColumn("__rn", F.row_number().over(wq))
-            .filter(F.col("__rn") <= keep)
-            .drop("__rn")
-        )
-        if rerank_corpus is None:
-            return cand.join(F.broadcast(qid_frame), "__qi").select(
-                F.col(query_id_col),
-                F.col("vec_id_out").alias(id_col),
-                F.col("adc").alias("score"),
-            )
-        return _exact_rerank_batch(
-            cand,
-            rerank_corpus,
+        return _adc_serve(
+            self,
+            queries,
+            qrows,
             qmat,
-            qid_frame,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
+            codes_df.mapInPandas(scan, _ADC_SCHEMA),
             k=k,
+            candidates=candidates,
+            rerank_corpus=rerank_corpus,
+            query_id_col=query_id_col,
         )
 
 
@@ -3970,7 +3580,6 @@ def semantic_dedup_index(
     nprobe: "int | None" = None,
     query_id_col: str = "vec_id",
     query_vec_col: str = "embedding",
-    engine: str = "gemm",
 ) -> DataFrame:
     """Incremental SEMANTIC dedup served from the persisted ANN store —
     the embedding-space member of the incremental-dedup family
@@ -3987,21 +3596,10 @@ def semantic_dedup_index(
     makes the decision exact; bounded ``nprobe`` trades recall for
     probe cost exactly like every other serve. Returns one row per
     new vector: (new_id, nn_id, score, is_dup) — is_dup compares the
-    6dp-ROUNDED score against ``threshold`` so the flag is stable
-    across engines.
-
-    ``engine="gemm"`` (default) scores through
-    :meth:`IVFDiskIndex.search_batch_gemm` — one BLAS GEMM per pruned
-    list chunk instead of an interpreted higher-order cosine per
-    (new × old) pair, and the nearest-neighbor pick lives on the
-    6dp-ROUNDED score (the GEMM rank law: float-sum order differs
-    under BLAS, so round-then-rank with id tie-break keeps the pick
-    engine-exact). ``engine="expression"`` keeps the plan-fused JVM
-    Column form, ranking on the unrounded fold (the two laws pick the
-    same neighbor unless two old vectors tie within 1e-6 of the
-    query)."""
-    if engine not in ("gemm", "expression"):
-        raise ValueError(f"engine must be 'gemm' or 'expression', not {engine!r}")
+    6dp-ROUNDED score against ``threshold``. The nearest neighbor is
+    :meth:`IVFDiskIndex.search_batch`'s pick — one BLAS GEMM per
+    pruned list chunk, ranked on the 6dp-rounded cosine with id
+    tie-break (the scorer's law)."""
     n_lists = len(index.centroids)
     nprobe = n_lists if nprobe is None else nprobe
     id_col = index.meta["id_col"]
@@ -4009,10 +3607,7 @@ def semantic_dedup_index(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("qvec"),
     )
-    if engine == "gemm":
-        out = index.search_batch_gemm(queries, k=1, nprobe=nprobe)
-    else:
-        out = index.search_batch(queries, k=1, nprobe=nprobe)
+    out = index.search_batch(queries, k=1, nprobe=nprobe)
     return out.select(
         F.col("query_id").alias("new_id"),
         F.col(id_col).alias("nn_id"),

@@ -57,8 +57,8 @@ def connected_components(
       floor — driver-side union-find over the bare (src, dst) id
       pairs (KB–MB of longs, never document payloads), returned as one
       broadcast-sized frame.
-    - DENSITY (measured, scripts/scale_probe.py 8×/32×/128×, recorded
-      in BASELINE.md): star contraction (:func:`connected_components_star`)
+    - DENSITY (measured at 8×/32×/128× replication, recorded in
+      BASELINE.md): star contraction (:func:`connected_components_star`)
       beats label propagation ~1.6–1.8× on SPARSE graphs (avg degree
       ≈7 at 8×, ≈31 at 32×) because its per-round frames are the
       monotonically SHRINKING edge set — but LOSES 1.6× on dense

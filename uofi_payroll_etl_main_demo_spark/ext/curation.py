@@ -127,8 +127,8 @@ def repetition_stats(
     (near-cold session, min-of-2 after one warmup) WITH NO PLAN
     CHANGE — the interpreted-HOF eval paths JIT gradually across many
     invocations. The r4 in-suite 1.28 s and the r9 idle 3.06 s are the
-    two ends of the same band; scripts/jit_band_probe.py reproduces
-    both from HEAD. Judge bench values for this row only against
+    two ends of the same band (the reproduction is recorded in
+    BASELINE.md). Judge bench values for this row only against
     in-suite runs.
     """
     toks = _scale_in(df.select(F.col(id_col), F.col(text_col))).select(

@@ -36,8 +36,8 @@ Two engines, one law:
   the result EQUALS the inline brute force (the value-oracle
   configuration); at bounded nprobe / candidates / per-vector k it is
   the standard approximate MaxSim (missing pairs contribute 0),
-  trading recall for a read fraction — measured in
-  scripts/late_interaction_probe.py.
+  trading recall for a read fraction — recorded in BASELINE.md's
+  late-interaction scale table.
 
 Reference parity note: the reference pipeline has no retrieval
 surface; this module extends the engine's LLM-data-pipeline family

@@ -975,7 +975,7 @@ def q_ivf_topk(spark, sf_dir):
     oracle only at full probe, and two registry rows over one code
     path is padding — the nprobe<n_centroids recall/latency trade
     stays pinned in tests (test_ann_index.py probe-subset pins) and
-    measured in scripts/ann_batch_probe.py."""
+    recorded in BASELINE.md's batched-serving table."""
     from uofi_payroll_etl_main_demo_spark.ext.ivf import build_ivf_index
 
     index = build_ivf_index(_t(spark, sf_dir, "embeddings"), n_centroids=8)
@@ -992,8 +992,8 @@ def q_ivf_pq_topk(spark, sf_dir):
     (the r9 persisted-store row ext_ivfpq_index_query oracles the
     store lifecycle; THIS row oracles the inline composition). The
     bounded nprobe/candidates trades stay pinned in tests
-    (ivf_pq_search ≡ pq_top_k at full probe) and measured in
-    scripts/ivfpq_probe.py."""
+    (ivf_pq_search ≡ pq_top_k at full probe) and recorded in
+    BASELINE.md's IVF-PQ table."""
     from uofi_payroll_etl_main_demo_spark.ext.ivf import ivf_pq_search
 
     out = ivf_pq_search(
@@ -2556,7 +2556,7 @@ REGISTRY["ext_ivf_index_query"] = (q_ivf_index_query, _sql_topk_cosine())
 # result is data-adaptive — un-oracle-able by nature). The partial-
 # probe serving path stays covered where adaptive behavior belongs:
 # test_ann_index.py probe-subset/partition-pruning pins and the
-# scripts/ann_batch_probe.py latency/recall table.
+# BASELINE.md batched-serving latency/recall table.
 REGISTRY["ext_ivf_filtered_query"] = (
     q_ivf_filtered_query,
     _sql_topk_cosine(where="WHERE label = 2"),
@@ -2704,16 +2704,16 @@ def q_ivf_batch_query(spark, sf_dir):
     """BATCHED ANN serving (IVFDiskIndex.search_batch): ONE Spark job
     answers 100 query vectors against the persisted IVF store — the
     retrieval / hard-negative-mining shape, where the one-job-per-
-    vector loop would schedule 100 jobs (probe: scripts/
-    ann_batch_probe.py records the per-query cost collapse). Each
-    query ranks its probe lists JVM-side from the driver-held
-    centroids (same law as single-query serving, bit-for-bit),
-    explodes to (query, centroid) pairs, broadcasts onto the
-    partitioned lists — dynamic partition pruning keeps the scan to
-    the probed lists' union — and one query_id exchange takes each
-    top-k. Full probe makes every per-query answer exactly the brute
-    force, so the whole batched path is value-oracled (the pruned-
-    probe latency trade is pinned in tests + the probe script)."""
+    vector loop would schedule 100 jobs (BASELINE.md records the
+    per-query cost collapse). The bounded query batch ranks its probe
+    lists driver-side (the rank_centroids law, vectorized), the probe
+    union is a static partition filter on the list scan, each pruned
+    list chunk scores its probing queries as one BLAS GEMM with a
+    per-query partial top-k, and one query_id exchange takes each
+    top-k (rank key: cosine rounded to 6dp DESC, id ASC). Full probe
+    makes every per-query answer exactly the brute force, so the
+    whole batched path is value-oracled (the pruned-probe latency
+    trade is pinned in tests and recorded in BASELINE.md)."""
     index = _ensure_sf_ivf_index(spark, sf_dir, n_centroids=8)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 100).select(
@@ -2933,8 +2933,8 @@ def q_late_interaction_topk(spark, sf_dir):
     (query-vector, passage) pair with exact reranked cosines, so the
     whole composed lifecycle (chunk → embed → store → batched serve →
     pool) carries a VALUE oracle; the bounded-probe approximation and
-    the brute-force-pooling comparison live in
-    scripts/late_interaction_probe.py and tests."""
+    the brute-force-pooling comparison live in tests and in
+    BASELINE.md's late-interaction scale table."""
     from uofi_payroll_etl_main_demo_spark.ext.late_interaction import (
         chunk_bow_vectors,
         maxsim_topk_index,
@@ -3013,10 +3013,10 @@ def q_semantic_dedup_incremental(spark, sf_dir):
     the post-delete IVF store, which holds exactly the other vectors —
     in ONE batched k=1 serve (any-neighbor-above-τ ⇔ top-1-above-τ),
     so daily dedup cost tracks the batch × probed lists, never
-    corpus². The GEMM engine scores each pruned list chunk as one
+    corpus². The batch scorer scores each pruned list chunk as one
     BLAS multiply (the interpreted per-pair cosine was 2.7×
     slower at sf0.1) and picks the neighbor on the 6dp-rounded score
-    — the established GEMM rank law, mirrored by the oracle. Full
+    — the scorer's rank law, mirrored by the oracle. Full
     probe makes each nearest-neighbor decision exact, so the whole
     flow is value-oracled: (new_id, nn_id, score, is_dup) — the
     embedding-space member of the incremental-dedup family
@@ -3059,17 +3059,17 @@ REGISTRY["ext_semantic_dedup_incremental"] = (
 
 def q_hard_negatives_ivf(spark, sf_dir):
     """Hard-negative mining SERVED FROM the persisted IVF store
-    (ext/ann_index.py hard_negative_mining_index, GEMM engine): 100
-    anchor vectors mine their top-3 most-similar DIFFERENT-label
-    neighbors in ONE batched job — BLAS scoring per pruned list
-    chunk, the different-label predicate as an in-chunk ``neq_attr``
-    mask BEFORE the partial top-k (exact per-query filtered
-    semantics), and the store's lists are what get scanned, not the
-    raw corpus. Full probe makes every answer exactly the
-    label-filtered brute force under the GEMM rank law (cosines
-    rounded to 6dp before ranking), so the whole index-backed mining
-    path is value-oracled (the expression engine, pruned-probe
-    mining, and auto-widen are pinned in tests/test_ann_index.py)."""
+    (ext/ann_index.py hard_negative_mining_index): 100 anchor vectors
+    mine their top-3 most-similar DIFFERENT-label neighbors in ONE
+    batched job — BLAS scoring per pruned list chunk, the
+    different-label predicate as an in-chunk ``neq_attr`` mask BEFORE
+    the partial top-k (exact per-query filtered semantics), and the
+    store's lists are what get scanned, not the raw corpus. Full
+    probe makes every answer exactly the label-filtered brute force
+    under the scorer's rank law (cosines rounded to 6dp before
+    ranking), so the whole index-backed mining path is value-oracled
+    (pruned-probe mining and auto-widen are pinned in
+    tests/test_ann_index.py)."""
     from uofi_payroll_etl_main_demo_spark.ext.ann_index import (
         hard_negative_mining_index,
     )
@@ -3088,7 +3088,7 @@ def q_hard_negatives_ivf(spark, sf_dir):
 def _sql_hard_negatives_index(k: int = 3, n_queries: int = 100) -> str:
     """Exact twin of index-backed hard-negative mining at full probe:
     per anchor, the top-k different-label neighbors by cosine over the
-    whole corpus (rank on the 6dp-ROUNDED score — the GEMM engine's
+    whole corpus (rank on the 6dp-ROUNDED score — the batch scorer's
     law, BLAS sum order differs so rounding-then-ranking keeps ties
     engine-exact)."""
     return f"""
@@ -3121,8 +3121,8 @@ def q_ann_recall_report(spark, sf_dir):
     (n_planes=4, the in-query approximate path) against exact ground
     truth, per query over the WHOLE corpus, aggregated to
     (n_queries, mean_recall, min_recall, frac_perfect). Ground truth
-    comes from the persisted IVF store at FULL probe through the GEMM
-    batch path (search_batch_gemm: BLAS scoring of the bounded query
+    comes from the persisted IVF store at FULL probe through the
+    batch scorer (search_batch: BLAS scoring of the bounded query
     matrix per pruned list partition, per-chunk partial top-k so the
     exchange carries chunks × q × k rows, never the all-pairs frame —
     the every-anchor-vs-itself eval is exactly the workload that path
@@ -3139,7 +3139,7 @@ def q_ann_recall_report(spark, sf_dir):
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    exact = index.search_batch_gemm(
+    exact = index.search_batch(
         queries,
         k=10,
         nprobe=8,
@@ -3170,8 +3170,8 @@ def _sql_ann_recall_report(
 ) -> str:
     """Twin of the recall@k eval: the approx leg reproduces knn_join's
     deterministic buckets (rank on ROUNDED cosine, its law); the exact
-    leg is the brute-force top-k ranked on ROUNDED score (the GEMM
-    path's law — BLAS sum order differs, so rounding-then-ranking is
+    leg is the brute-force top-k ranked on ROUNDED score (the batch
+    scorer's law — BLAS sum order differs, so rounding-then-ranking is
     what keeps ties engine-exact); recall joins the two id sets."""
     from uofi_payroll_etl_main_demo_spark.ext.similarity import _hyperplanes
 
@@ -3241,7 +3241,7 @@ def q_retrieval_rank_eval(spark, sf_dir):
     milli-weights — the constant-shipping law above) and NDCG@10 of
     the deterministic LSH retrieval ranking against a 5-deep exact
     ground-truth set. Ground truth is the persisted IVF store at full
-    probe through the GEMM batch path (self excluded in-scan); the
+    probe through the batch scorer (self excluded in-scan); the
     system ranking is knn_join_gemm's in-bucket top-10 with its
     rounded-cosine rank law. Queries whose LSH bucket is empty still
     report (zeros) — an eval that silently drops its failures isn't
@@ -3257,7 +3257,7 @@ def q_retrieval_rank_eval(spark, sf_dir):
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    truth = index.search_batch_gemm(
+    truth = index.search_batch(
         queries, k=5, nprobe=8, exclude_query_id=True
     ).select(
         "query_id",
@@ -3537,8 +3537,8 @@ def q_pq_postretrain_query(spark, sf_dir):
     over the SURVIVORS: the oracle proves the retrain re-encoded
     exactly the membership — nothing lost, nothing duplicated, deleted
     ids NOT resurrected from the corpus frame it trains on. The ADC
-    accuracy recovery itself is pinned in tests + the drift probe
-    (scripts/pq_drift_probe.py, BASELINE.md)."""
+    accuracy recovery itself is pinned in tests and recorded in
+    BASELINE.md's PQ drift table."""
     emb = _t(spark, sf_dir, "embeddings")
     index = _ensure_sf_pq_postretrain_index(spark, sf_dir)
     out = index.search(
@@ -4195,8 +4195,8 @@ def q_pq_topk(spark, sf_dir):
     true top-k; oracle = the exact SQL top-k. Round-10 fold of the
     former rows-only candidates=100 row into its full-margin twin
     (ext_pq_topk_full, r9-green) — the bounded-margin recall/latency
-    trade stays pinned in tests and measured in scripts/
-    ann_batch_probe.py / pq_drift_probe.py."""
+    trade stays pinned in tests and recorded in BASELINE.md's
+    batched-serving and PQ drift tables."""
     from uofi_payroll_etl_main_demo_spark.ext.similarity import pq_top_k
 
     out = pq_top_k(
