@@ -623,6 +623,37 @@ def test_pq_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
     assert gotr == wantr
 
 
+def test_pq_search_batch_string_query_ids_ride_the_scan(
+    spark, sf_dir, tmp_path
+):
+    """The query id rides the ADC scan and the rerank tail as a column
+    of its own: a string id keeps its type, and each query's rows equal
+    the rows the same batch returns under its numeric id."""
+    idx = str(tmp_path / "pq")
+    emb = _emb(spark, sf_dir)
+    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t")
+    index = pq_index_load(spark, idx)
+    queries = _qframe(emb, 4)
+    named = queries.select(
+        F.concat(F.lit("q"), F.col("query_id")).alias("qname"), "qvec"
+    )
+    for kw in (
+        {"candidates": 50},
+        {"candidates": 10**6, "rerank_corpus": emb},
+    ):
+        want = {
+            (f"q{r['query_id']}", r["vec_id"], round(r["score"], 9))
+            for r in index.search_batch(queries, k=5, **kw).collect()
+        }
+        out = index.search_batch(named, k=5, query_id_col="qname", **kw)
+        assert out.schema["qname"].dataType.simpleString() == "string"
+        got = {
+            (r["qname"], r["vec_id"], round(r["score"], 9))
+            for r in out.collect()
+        }
+        assert got == want and len(got) == 20
+
+
 def _assert_centroid_partition_filter(plan):
     """The ``assigned`` list scan carries the probe union as a static
     ``centroid`` partition filter."""

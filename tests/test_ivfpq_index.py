@@ -176,6 +176,37 @@ def test_ivfpq_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
         assert got == single, f"query {qid} diverged"
 
 
+def test_ivfpq_batch_string_query_ids_ride_the_scan(spark, sf_dir, tmp_path):
+    """The query id rides the pruned ADC scan and the rerank tail as a
+    column of its own: a string id keeps its type, and each query's
+    rows equal the rows the same batch returns under its numeric id."""
+    idx = str(tmp_path / "ivfpq")
+    emb = _emb(spark, sf_dir)
+    _build(emb, idx)
+    loaded = ivfpq_index_load(spark, idx)
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    named = queries.select(
+        F.concat(F.lit("q"), F.col("query_id")).alias("qname"), "qvec"
+    )
+    for kw in (
+        {"nprobe": 2, "candidates": 50},
+        {"nprobe": 4, "candidates": FULL, "rerank_corpus": emb},
+    ):
+        want = {
+            (f"q{r['query_id']}", r["vec_id"], round(r["score"], 9))
+            for r in loaded.search_batch(queries, k=5, **kw).collect()
+        }
+        out = loaded.search_batch(named, k=5, query_id_col="qname", **kw)
+        assert out.schema["qname"].dataType.simpleString() == "string"
+        got = {
+            (r["qname"], r["vec_id"], round(r["score"], 9))
+            for r in out.collect()
+        }
+        assert got == want and len(got) == 20
+
+
 def test_ivfpq_batch_pruned_probe_partition_filter(spark, sf_dir, tmp_path):
     """Partial-probe BATCHED serving (ADC only): the codes scan carries
     the probe union as a static partition filter."""

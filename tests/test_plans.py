@@ -155,7 +155,10 @@ def test_registry_wide_plan_lint(spark, sf_dir):
     failures = []
     for name, fn in R.queries().items():
         try:
-            text = formatted_plan(fn(spark, sf_dir))
+            # build once and lint that frame: some builders run eager
+            # work (store builds, bounded collects) on every call
+            df = fn(spark, sf_dir)
+            text = formatted_plan(df)
         except Exception as exc:  # pragma: no cover - lint must name it
             failures.append(f"{name}: plan build failed: {exc}")
             continue
@@ -167,7 +170,7 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         ):
             failures.append(f"{name}: unexpected BroadcastNestedLoopJoin")
         if name not in wide_ok:
-            r = inspect_plan(fn(spark, sf_dir))
+            r = inspect_plan(df)
             for scan in r.scans:
                 width = next(
                     (

@@ -7,6 +7,8 @@ BATCH run of the same transform — the unified-semantics guarantee.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -235,7 +237,30 @@ def test_sessionize_streaming_stateful(spark, tmp_path):
     src = str(tmp_path / "sess_events")
     df.write.parquet(src)
     stream = read_events_stream(spark, src)
-    got = run_stream(spark, sessionize(stream, timeout_ms=1), "sessions", "append")
+    q = (
+        sessionize(stream, timeout_ms=1)
+        .writeStream.format("memory")
+        .queryName("sessions")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    # ProcessingTimeTimeout state makes every trigger run another
+    # (no-data) batch to check timeouts, so this availableNow query
+    # never terminates on its own, and processAllAvailable() never
+    # returns: wait until the input rows are consumed, then stop it —
+    # left running, it spins no-data batches for the rest of the session
+    deadline = time.monotonic() + 120
+    try:
+        while (
+            sum(p["numInputRows"] for p in q.recentProgress) < len(rows)
+            and time.monotonic() < deadline
+        ):
+            q.awaitTermination(0.2)
+        assert q.exception() is None
+    finally:
+        q.stop()
+    got = spark.sql("SELECT * FROM sessions")
     assert got.columns == [
         "user_id", "session_start", "session_end", "n_events", "sum_value"
     ]

@@ -1953,14 +1953,18 @@ def _pq_encode(
     )
 
 
-# per-query within-chunk ADC candidates, emitted by the PQ / IVF-PQ scans
-_ADC_SCHEMA = T.StructType(
-    [
-        T.StructField("__qi", T.IntegerType()),
-        T.StructField("vec_id_out", T.LongType()),
-        T.StructField("adc", T.DoubleType()),
-    ]
-)
+def _adc_schema(queries: DataFrame, query_id_col: str) -> T.StructType:
+    """Per-query within-chunk ADC candidates, emitted by the PQ / IVF-PQ
+    scans: the query's row index in the batch (``__qi``, which indexes
+    the query matrix), its id, and one scored candidate."""
+    return T.StructType(
+        [
+            T.StructField("__qi", T.IntegerType()),
+            T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+            T.StructField("vec_id_out", T.LongType()),
+            T.StructField("adc", T.DoubleType()),
+        ]
+    )
 
 
 def _top_per_query(df: DataFrame, n: int, nq: int, *order) -> DataFrame:
@@ -1984,8 +1988,6 @@ def _top_per_query(df: DataFrame, n: int, nq: int, *order) -> DataFrame:
 
 def _adc_serve(
     index,
-    queries: DataFrame,
-    qrows,
     qmat,
     scanned: DataFrame,
     *,
@@ -1995,28 +1997,18 @@ def _adc_serve(
     query_id_col: str,
 ) -> DataFrame:
     """Shared tail of the PQ and IVF-PQ batch scorers: ``scanned`` (the
-    Arrow ADC scan's per-query within-chunk candidates, ``_ADC_SCHEMA``)
-    → one ``__qi`` exchange keeping each query's top ``candidates``
-    (adc DESC, id ASC) → the raw ADC top-k as (query_id, id, score),
-    or the exact rerank of the candidates (:func:`_exact_rerank_batch`)."""
+    Arrow ADC scan's per-query within-chunk candidates,
+    :func:`_adc_schema`) → one ``__qi`` exchange keeping each query's
+    top ``candidates`` (adc DESC, id ASC) → the raw ADC top-k as
+    (query_id, id, score), or the exact rerank of the candidates
+    (:func:`_exact_rerank_batch`)."""
     id_col = index.meta["id_col"]
-    qid_frame = index.spark.createDataFrame(
-        [(i, r[query_id_col]) for i, r in enumerate(qrows)],
-        T.StructType(
-            [
-                T.StructField("__qi", T.IntegerType()),
-                T.StructField(
-                    query_id_col, queries.schema[query_id_col].dataType
-                ),
-            ]
-        ),
-    )
     keep = candidates if rerank_corpus is not None else min(candidates, k)
     cand = _top_per_query(
-        scanned, keep, len(qrows), F.desc("adc"), F.asc("vec_id_out")
+        scanned, keep, len(qmat), F.desc("adc"), F.asc("vec_id_out")
     )
     if rerank_corpus is None:
-        return cand.join(F.broadcast(qid_frame), "__qi").select(
+        return cand.select(
             F.col(query_id_col),
             F.col("vec_id_out").alias(id_col),
             F.col("adc").alias("score"),
@@ -2025,7 +2017,6 @@ def _adc_serve(
         cand,
         rerank_corpus,
         qmat,
-        qid_frame,
         id_col=id_col,
         vec_col=index.meta["vec_col"],
         query_id_col=query_id_col,
@@ -2037,7 +2028,6 @@ def _exact_rerank_batch(
     cand: DataFrame,
     rerank_corpus: DataFrame,
     qmat,
-    qid_frame: DataFrame,
     *,
     id_col: str,
     vec_col: str,
@@ -2060,20 +2050,23 @@ def _exact_rerank_batch(
     candidates have undefined cosine and are dropped. ``qmat`` holds
     the RAW query vectors, also in cosine mode.
 
-    ``cand`` must carry (__qi int, vec_id_out) — the per-query
-    candidate frame the ADC stage produced; ``qmat`` is the (nq × dim)
-    query matrix whose row index IS ``__qi``."""
+    ``cand`` must carry (__qi int, query id, vec_id_out) — the
+    per-query candidate frame the ADC stage produced; ``qmat`` is the
+    (nq × dim) query matrix whose row index IS ``__qi``."""
     import numpy as np
 
     nq, dim = qmat.shape
     Qm = qmat
-    ids = cand.select("__qi", F.col("vec_id_out").alias(id_col))
+    ids = cand.select(
+        "__qi", query_id_col, F.col("vec_id_out").alias(id_col)
+    )
     fetched = rerank_corpus.join(
         F.broadcast(ids.select(id_col).distinct()), id_col, "left_semi"
     ).select(id_col, vec_col)
     rs_schema = T.StructType(
         [
             T.StructField("__qi", T.IntegerType()),
+            cand.schema[query_id_col],
             T.StructField(
                 id_col, rerank_corpus.schema[id_col].dataType
             ),
@@ -2109,6 +2102,7 @@ def _exact_rerank_batch(
             yield pd.DataFrame(
                 {
                     "__qi": qi[keep],
+                    query_id_col: pdf[query_id_col].to_numpy()[keep],
                     id_col: pdf[id_col].to_numpy()[keep],
                     "score": dot[keep] / denom[keep],
                 }
@@ -2121,9 +2115,7 @@ def _exact_rerank_batch(
             nq,
             F.desc("score"),
             F.asc(id_col),
-        )
-        .join(F.broadcast(qid_frame), "__qi")
-        .select(F.col(query_id_col), F.col(id_col), F.col("score"))
+        ).select(F.col(query_id_col), F.col(id_col), F.col("score"))
     )
 
 
@@ -2235,9 +2227,18 @@ def _serve_one(index, query_vec, k: int, **kwargs) -> DataFrame:
     so a single query and a batch row can never disagree. The batch
     holds at most ``k`` rows; the ``limit`` only makes the final sort
     one top-k stage instead of a range-partitioned sort."""
+    import numpy as np
+    import pandas as pd
+
     id_col = index.meta["id_col"]
+    # from pandas, so the session's Arrow path builds the frame in the
+    # JVM; a list of rows would become a Python RDD, and every job the
+    # scorer runs over it (intake collect, auto-widen probes) would pay
+    # a Python worker round trip
     q = index.spark.createDataFrame(
-        [(0, [float(x) for x in query_vec])],
+        pd.DataFrame(
+            {"__qid": [0], "__qvec": [np.asarray(query_vec, dtype=float)]}
+        ),
         "__qid long, __qvec array<double>",
     )
     return (
@@ -2351,6 +2352,7 @@ class PQDiskIndex:
                 ),
             )
         qmat = _query_matrix(qrows, query_vec_col, meta["dim"])
+        qids = np.array([r[query_id_col] for r in qrows])
         nq = len(qmat)
         # cosine mode: queries join the unit-normalized store space for
         # the ADC; the exact rerank scores TRUE cosine of the raw
@@ -2383,6 +2385,7 @@ class PQDiskIndex:
                 yield pd.DataFrame(
                     {
                         "__qi": rows_q.astype("int32"),
+                        query_id_col: qids[rows_q],
                         "vec_id_out": pdf[id_col].to_numpy()[rows_v],
                         "adc": adc[rows_q, rows_v],
                     }
@@ -2397,10 +2400,8 @@ class PQDiskIndex:
             )
         return _adc_serve(
             self,
-            queries,
-            qrows,
             qmat,
-            codes_df.mapInPandas(scan, _ADC_SCHEMA),
+            codes_df.mapInPandas(scan, _adc_schema(queries, query_id_col)),
             k=k,
             candidates=candidates,
             rerank_corpus=rerank_corpus,
@@ -3035,6 +3036,7 @@ class IVFPQDiskIndex:
         if qrows is None:
             return _paged_batch_serve(queries, qcols, max_queries, serve)
         qmat = _query_matrix(qrows, query_vec_col, meta["dim"])
+        qids = np.array([r[query_id_col] for r in qrows])
         nq = len(qmat)
         Qn, _ = _unit_rows(qmat)
         # cosine mode: queries join the unit-normalized store space for
@@ -3082,9 +3084,11 @@ class IVFPQDiskIndex:
                     out_i.append(rids[rows_v])
                     out_s.append(adc[rows_r, rows_v])
                 if out_q:
+                    qi = np.concatenate(out_q)
                     yield pd.DataFrame(
                         {
-                            "__qi": np.concatenate(out_q).astype("int32"),
+                            "__qi": qi.astype("int32"),
+                            query_id_col: qids[qi],
                             "vec_id_out": np.concatenate(out_i),
                             "adc": np.concatenate(out_s),
                         }
@@ -3099,10 +3103,8 @@ class IVFPQDiskIndex:
             )
         return _adc_serve(
             self,
-            queries,
-            qrows,
             qmat,
-            codes_df.mapInPandas(scan, _ADC_SCHEMA),
+            codes_df.mapInPandas(scan, _adc_schema(queries, query_id_col)),
             k=k,
             candidates=candidates,
             rerank_corpus=rerank_corpus,
