@@ -51,6 +51,32 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
+@pytest.fixture(scope="module")
+def ivf4(spark, sf_dir, tmp_path_factory):
+    """IVF store (4 lists) over the embeddings, shared by the tests
+    that only read it."""
+    idx = str(tmp_path_factory.mktemp("ivf4") / "ivf")
+    ivf_index_build(_emb(spark, sf_dir), idx, n_centroids=4, corpus_tag="t1")
+    return idx
+
+
+@pytest.fixture(scope="module")
+def ivf8(spark, sf_dir, tmp_path_factory):
+    """IVF store (8 lists), shared by the tests that only read it."""
+    idx = str(tmp_path_factory.mktemp("ivf8") / "ivf")
+    ivf_index_build(_emb(spark, sf_dir), idx, n_centroids=8, corpus_tag="t")
+    return idx
+
+
+@pytest.fixture(scope="module")
+def pq8x16(spark, sf_dir, tmp_path_factory):
+    """PQ store (m=8, 16 centroids), shared by the tests that only read
+    it."""
+    idx = str(tmp_path_factory.mktemp("pq8x16") / "pq")
+    pq_index_build(_emb(spark, sf_dir), idx, m=8, n_centroids=16, corpus_tag="t")
+    return idx
+
+
 def _index_mtimes(index_dir: str) -> dict[str, float]:
     out = {}
     for root, _dirs, files in os.walk(index_dir):
@@ -60,11 +86,9 @@ def _index_mtimes(index_dir: str) -> dict[str, float]:
     return out
 
 
-def test_ivf_index_roundtrip_exact_at_full_probe(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivf")
+def test_ivf_index_roundtrip_exact_at_full_probe(spark, sf_dir, ivf4):
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=4, corpus_tag="t1")
-    loaded = ivf_index_load(spark, idx)
+    loaded = ivf_index_load(spark, ivf4)
     got = [
         (r["vec_id"], round(r["score"], 9))
         for r in loaded.search(QV, k=10, nprobe=4).collect()
@@ -76,14 +100,12 @@ def test_ivf_index_roundtrip_exact_at_full_probe(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_ivf_serving_plan_reads_only_index_tables(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivf")
-    ivf_index_build(_emb(spark, sf_dir), idx, n_centroids=4, corpus_tag="t1")
-    out = ivf_index_load(spark, idx).search(QV, k=10, nprobe=2)
+def test_ivf_serving_plan_reads_only_index_tables(spark, ivf4):
+    out = ivf_index_load(spark, ivf4).search(QV, k=10, nprobe=2)
     report = inspect_plan(out)
     assert report.scans, "expected at least one parquet scan"
     for s in report.scans:
-        assert idx in s["location"], f"non-index scan: {s['location']}"
+        assert ivf4 in s["location"], f"non-index scan: {s['location']}"
         assert "embeddings.parquet" not in s["location"]
     # the probe predicate must prune PARTITIONS (inverted lists), not
     # just filter rows post-scan
@@ -93,14 +115,12 @@ def test_ivf_serving_plan_reads_only_index_tables(spark, sf_dir, tmp_path):
     assert "centroid" in plan[lo : lo + 200]
 
 
-def test_ivf_filtered_search_exact_and_pruned(spark, sf_dir, tmp_path):
+def test_ivf_filtered_search_exact_and_pruned(spark, sf_dir, ivf4):
     """Filtered serving: full probe + filter_ids == brute force over
     the filtered corpus, and the plan keeps BOTH the partition pruning
     (centroid) and the pre-score semi-join."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=4, corpus_tag="t1")
-    loaded = ivf_index_load(spark, idx)
+    loaded = ivf_index_load(spark, ivf4)
     allowed = emb.filter(F.col("label") == 2).select("vec_id")
     out = loaded.search(QV, k=10, nprobe=4, filter_ids=allowed)
     got = [(r["vec_id"], round(r["score"], 9)) for r in out.collect()]
@@ -122,15 +142,13 @@ def test_ivf_filtered_search_exact_and_pruned(spark, sf_dir, tmp_path):
     assert "LeftSemi" in plan
 
 
-def test_ivf_filtered_auto_widen_reaches_k(spark, sf_dir, tmp_path):
+def test_ivf_filtered_auto_widen_reaches_k(spark, sf_dir, ivf8):
     """A selective predicate can exhaust the nearest lists; auto_widen
     doubles nprobe until k survivors exist (or every list is probed),
     and at the full-probe backstop the result is exactly the filtered
     brute force."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t1")
-    loaded = ivf_index_load(spark, idx)
+    loaded = ivf_index_load(spark, ivf8)
     # ~1/25 of the corpus, and k = ALL of it: any legal stop point of
     # the widening loop must then have collected every allowed vector,
     # so the result equals the filtered brute force regardless of the
@@ -165,15 +183,13 @@ def test_ensure_ivf_loads_without_rebuilding(spark, sf_dir, tmp_path):
     assert _index_mtimes(idx) != before
 
 
-def test_ivf_probe_subset_of_full(spark, sf_dir, tmp_path):
+def test_ivf_probe_subset_of_full(spark, sf_dir, ivf4):
     """nprobe<full returns a subset of the corpus ranked by true
     cosine — every returned row's score matches the exact score, and
     full probe recovers the true top-k (recall trade is only WHICH
     rows survive the pruning)."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=4, corpus_tag="t1")
-    loaded = ivf_index_load(spark, idx)
+    loaded = ivf_index_load(spark, ivf4)
     exact = {
         r["vec_id"]: round(r["score"], 9)
         for r in brute_force_top_k(emb, QV, k=10_000).collect()
@@ -184,11 +200,9 @@ def test_ivf_probe_subset_of_full(spark, sf_dir, tmp_path):
         assert round(r["score"], 9) == exact[r["vec_id"]]
 
 
-def test_pq_index_roundtrip_exact_at_full_margin(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "pq")
+def test_pq_index_roundtrip_exact_at_full_margin(spark, sf_dir, pq8x16):
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t1")
-    loaded = pq_index_load(spark, idx)
+    loaded = pq_index_load(spark, pq8x16)
     got = [
         (r["vec_id"], round(r["score"], 9))
         for r in loaded.search(
@@ -202,11 +216,9 @@ def test_pq_index_roundtrip_exact_at_full_margin(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_pq_codes_table_shape_and_adc_only_path(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "pq")
+def test_pq_codes_table_shape_and_adc_only_path(spark, sf_dir, pq8x16):
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t1")
-    codes = spark.read.parquet(_tp(spark, idx, "codes"))
+    codes = spark.read.parquet(_tp(spark, pq8x16, "codes"))
     n = emb.count()
     assert codes.count() == n  # every vector encoded
     bad = codes.filter(
@@ -215,10 +227,10 @@ def test_pq_codes_table_shape_and_adc_only_path(spark, sf_dir, tmp_path):
     ).count()
     assert bad == 0
     # index-only ADC query: no corpus touch, approximate scores
-    out = pq_index_load(spark, idx).search(QV, k=5, candidates=50)
+    out = pq_index_load(spark, pq8x16).search(QV, k=5, candidates=50)
     report = inspect_plan(out)
     for s in report.scans:
-        assert idx in s["location"], f"non-index scan: {s['location']}"
+        assert pq8x16 in s["location"], f"non-index scan: {s['location']}"
     assert out.count() == 5
 
 
@@ -330,13 +342,11 @@ def test_pq_index_add_grows_codes_without_retrain(spark, sf_dir, tmp_path):
         pq_index_add(bad, idx, new_corpus_tag="x", batch_id="b2")
 
 
-def test_pq_filtered_search_exact(spark, sf_dir, tmp_path):
+def test_pq_filtered_search_exact(spark, sf_dir, pq8x16):
     """filter_ids semi-joins the codes before the ADC scan; at full
     candidate margin the reranked answer equals filtered brute force."""
-    idx = str(tmp_path / "pq")
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t")
-    loaded = pq_index_load(spark, idx)
+    loaded = pq_index_load(spark, pq8x16)
     allowed = emb.filter(F.col("label") == 2).select("vec_id")
     got = [
         (r["vec_id"], round(r["score"], 9))
@@ -357,11 +367,9 @@ def test_pq_filtered_search_exact(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_index_kind_and_meta_guards(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivf")
-    ivf_index_build(_emb(spark, sf_dir), idx, n_centroids=4, corpus_tag="t")
+def test_index_kind_and_meta_guards(spark, ivf4):
     with pytest.raises(ValueError, match="not pq"):
-        pq_index_load(spark, idx)
+        pq_index_load(spark, ivf4)
 
 
 def test_corpus_fingerprint_tracks_file_state(tmp_path):
@@ -555,15 +563,13 @@ def _qframe(emb, n):
     )
 
 
-def test_ivf_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
+def test_ivf_search_batch_matches_single_query_loop(spark, sf_dir, ivf8):
     """Batched serving is the single-query law, vectorized: at the
     SAME pruned nprobe, every query's batch rows equal its one-job
     search() rows bit-for-bit (probe ranking shares the rank_centroids
     arithmetic), including under a metadata filter."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     queries = _qframe(emb, 6)
     got = {
         (r["query_id"], r["vec_id"]): round(r["score"], 9)
@@ -590,13 +596,11 @@ def test_ivf_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
     assert gotf == wantf
 
 
-def test_pq_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
+def test_pq_search_batch_matches_single_query_loop(spark, sf_dir, pq8x16):
     """PQ batched ADC scan + batched rerank equal the per-query loop
     (shared LUT arithmetic; per-query candidate budgets independent)."""
-    idx = str(tmp_path / "pq")
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t")
-    index = pq_index_load(spark, idx)
+    index = pq_index_load(spark, pq8x16)
     queries = _qframe(emb, 6)
     qrows = queries.collect()
     got = {
@@ -624,15 +628,13 @@ def test_pq_search_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
 
 
 def test_pq_search_batch_string_query_ids_ride_the_scan(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, pq8x16
 ):
     """The query id rides the ADC scan and the rerank tail as a column
     of its own: a string id keeps its type, and each query's rows equal
     the rows the same batch returns under its numeric id."""
-    idx = str(tmp_path / "pq")
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t")
-    index = pq_index_load(spark, idx)
+    index = pq_index_load(spark, pq8x16)
     queries = _qframe(emb, 4)
     named = queries.select(
         F.concat(F.lit("q"), F.col("query_id")).alias("qname"), "qvec"
@@ -663,16 +665,14 @@ def _assert_centroid_partition_filter(plan):
     assert "centroid" in plan[lo : lo + 200]
 
 
-def test_ivf_batch_one_plan_with_partition_pruning(spark, sf_dir, tmp_path):
+def test_ivf_batch_one_plan_with_partition_pruning(spark, sf_dir, ivf8):
     """The batched serve is ONE action whose job count does NOT grow
     with the query count (the whole point vs the per-query loop), and
     the inverted-list scan carries the probe union as a static
     ``centroid`` partition filter — the single-query path's partition
     pruning, preserved under batching."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     tracker = spark.sparkContext.statusTracker()
 
     def njobs(tag, df):
@@ -699,16 +699,14 @@ def test_ivf_batch_one_plan_with_partition_pruning(spark, sf_dir, tmp_path):
         assert "assigned" in loc or "embeddings" in loc, loc
 
 
-def test_pq_search_batch_pages_over_cap_batches(spark, sf_dir, tmp_path):
+def test_pq_search_batch_pages_over_cap_batches(spark, sf_dir, pq8x16):
     """An over-cap batch no longer refuses: the serving layer pages
     ``max_queries``-sized chunks itself (one job per chunk, union of
     results), and the result is IDENTICAL to manual chunking — which
     per-query top-k guarantees by construction. 10 queries at
     max_queries=4 is a 3-chunk serve. Empty batches still refuse."""
-    idx = str(tmp_path / "pq")
     emb = _emb(spark, sf_dir)
-    pq_index_build(emb, idx, m=8, n_centroids=16, corpus_tag="t")
-    index = pq_index_load(spark, idx)
+    index = pq_index_load(spark, pq8x16)
     queries = _qframe(emb, 10)
 
     def rows(df):
@@ -920,16 +918,14 @@ def test_needs_retrain_requires_base_reference(spark, sf_dir, tmp_path):
 
 
 def test_ivf_search_batch_auto_widen_matches_filtered_brute_force(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivf8
 ):
     """Batched recall backstop: under an extreme predicate with k above
     the match count, widening is forced to full probe and every
     query's rows equal the single-query auto-widen path (which the
     oracle already proves equals the exact filtered brute force)."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     allowed = emb.filter(F.col("vec_id") % 101 == 7).select("vec_id")
     queries = _qframe(emb, 5)
     got = sorted(
@@ -965,7 +961,7 @@ def test_ivf_search_batch_auto_widen_matches_filtered_brute_force(
 
 
 def test_hard_negatives_index_full_probe_is_label_filtered_brute_force(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivf8
 ):
     """Index-backed hard-negative mining at full probe equals the
     per-anchor label-filtered brute force bit-for-bit — the value law
@@ -975,10 +971,8 @@ def test_hard_negatives_index_full_probe_is_label_filtered_brute_force(
         hard_negative_mining_index,
     )
 
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     anchors = emb.filter(F.col("vec_id") < 6)
     got = sorted(
         (
@@ -1020,7 +1014,7 @@ def test_hard_negatives_index_full_probe_is_label_filtered_brute_force(
 
 
 def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivf8
 ):
     """Production mining at pruned nprobe: every returned pair still
     satisfies the different-label predicate (the neq_attr mask runs
@@ -1032,10 +1026,8 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
         hard_negative_mining_index,
     )
 
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     anchors = emb.filter(F.col("vec_id") < 12)
     out = hard_negative_mining_index(
         index,
@@ -1068,15 +1060,13 @@ def test_hard_negatives_index_pruned_probe_keeps_pruning_and_filter(
 
 
 def test_search_batch_gemm_full_probe_is_brute_force(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivf8
 ):
     """The batch scorer at full probe equals the brute force per
     query (rounded-cosine compare — the rank law rounds before
     ranking), and exclude_query_id drops exactly the self row."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     queries = _qframe(emb, 6)
     got = {
         (r["query_id"], r["vec_id"]): round(r["score"], 6)
@@ -1100,15 +1090,13 @@ def test_search_batch_gemm_full_probe_is_brute_force(
         assert q not in ids and len(ids) == 5
 
 
-def test_search_batch_gemm_pages_over_cap_batches(spark, sf_dir, tmp_path):
+def test_search_batch_gemm_pages_over_cap_batches(spark, sf_dir, ivf4):
     """Over-cap batches page themselves in bounded chunks (the PQ
     serve's paging contract): 10 queries at max_queries=4 run as three
     chunk jobs whose union equals the under-cap serve of the same
     batch at the same full probe. Empty batches still refuse."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=4, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf4)
     queries = _qframe(emb, 10)
 
     def rows(df):
@@ -1205,7 +1193,7 @@ def test_pq_cosine_mode_exact_identity_and_norm_skew_fix(
 
 
 def test_search_batch_auto_widen_zero_driver_materialization(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, ivf8, monkeypatch
 ):
     """VERDICT r9 #2 done-criterion: the batched auto-widen loop keeps
     result rows on the executors — ZERO ``SparkSession.createDataFrame``
@@ -1217,10 +1205,8 @@ def test_search_batch_auto_widen_zero_driver_materialization(
     materialization of results ever creeps back."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     allowed = emb.filter(F.col("vec_id") % 101 == 7).select("vec_id")
     queries = _qframe(emb, 4)
 
@@ -1251,15 +1237,13 @@ def test_search_batch_auto_widen_zero_driver_materialization(
 
 
 def test_search_batch_auto_widen_excludes_zero_norm_queries(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivf8
 ):
     """A zero-norm query has undefined cosine and can never reach k
     survivors: it must yield NO rows and must NOT drive the widen loop
     — live queries in the same batch still serve normally."""
-    idx = str(tmp_path / "ivf")
     emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     live = _qframe(emb, 2)
     dead = live.sparkSession.createDataFrame(
         [(999, [0.0] * 64)], schema=live.schema
@@ -1272,29 +1256,23 @@ def test_search_batch_auto_widen_excludes_zero_norm_queries(
                for q in (0, 1))
 
 
-def test_ivf_single_query_zero_norm_short_circuits(spark, sf_dir, tmp_path):
+def test_ivf_single_query_zero_norm_short_circuits(spark, ivf8):
     """A zero-norm single query emits NO rows immediately — with and
     without auto_widen (without the short-circuit, the NULL-score
     filter would drive the widen loop through every probe width down
     to a full-index scan before returning the same empty frame)."""
-    idx = str(tmp_path / "ivf")
-    emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=8, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf8)
     zq = [0.0] * 64
     assert index.search(zq, k=5).count() == 0
     assert index.search(zq, k=5, auto_widen=True).count() == 0
 
 
-def test_widen_batch_of_null_vectors_refuses_loudly(spark, sf_dir, tmp_path):
+def test_widen_batch_of_null_vectors_refuses_loudly(spark, ivf4):
     """A widen batch whose every vector is NULL cannot be served (a
     NULL vector would reach the driver-side matrix build as None) —
     it refuses with a clear message instead of a numpy TypeError;
     an all-zero-norm batch still returns the shaped empty frame."""
-    idx = str(tmp_path / "ivf")
-    emb = _emb(spark, sf_dir)
-    ivf_index_build(emb, idx, n_centroids=4, corpus_tag="t")
-    index = ivf_index_load(spark, idx)
+    index = ivf_index_load(spark, ivf4)
     nulls = spark.createDataFrame(
         [(1, None), (2, None)], "query_id long, qvec array<double>"
     )

@@ -7,12 +7,17 @@ BATCH run of the same transform — the unified-semantics guarantee.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from uofi_payroll_etl_main_demo_spark.io.readers import read_parquet_table
+from uofi_payroll_etl_main_demo_spark.session import scoped_conf
 from uofi_payroll_etl_main_demo_spark.streaming import (
     correlate_streams,
     dedup_events,
@@ -23,6 +28,7 @@ from uofi_payroll_etl_main_demo_spark.streaming import (
     windowed_event_counts,
     write_stream_foreach_batch,
 )
+from uofi_payroll_etl_main_demo_spark.streaming.events import _write_batch
 
 
 @pytest.fixture(scope="module")
@@ -94,27 +100,129 @@ def test_stream_static_join_matches_batch(spark, sf_dir, events_dir, events_batc
 def test_foreach_batch_sink_exactly_once(spark, events_dir, events_batch, tmp_path):
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    q = write_stream_foreach_batch(stream, out, ckpt)
-    q.awaitTermination(120)
-    back = spark.read.parquet(out)
-    # several micro-batches landed, union of partitions == source exactly
-    assert back.select("__batch_id").distinct().count() > 1
-    assert back.count() == events_batch.count()
-    assert (
-        back.select("event_id").exceptAll(events_batch.select("event_id")).count()
-        == 0
+
+    def run():
+        stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+        q = write_stream_foreach_batch(stream, out, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        back = spark.read.parquet(out)
+        # several micro-batches landed, union of partitions == source exactly
+        assert back.select("__batch_id").distinct().count() > 1
+        assert back.count() == events_batch.count()
+        assert (
+            back.select("event_id")
+            .exceptAll(events_batch.select("event_id"))
+            .count()
+            == 0
+        )
+        return q, back
+
+    run()
+    # idempotency through the real sink: drop the last commit (a crash
+    # after the sink wrote, before the commit) and restart the same
+    # query on the same checkpoint; Spark replays that batch, whose
+    # write must replace its own directory, not append to it
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q, back = run()
+    assert last in [p["batchId"] for p in q.recentProgress]  # replayed
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert back.groupBy("event_id").count().filter("count > 1").count() == 0
+
+
+def _offset_conf(ckpt, batch_id):
+    """The session conf a checkpoint's offset log records for a batch."""
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as f:
+        f.readline()  # log version
+        return json.loads(f.readline())["conf"]
+
+
+def _last_batch(ckpt):
+    return max(
+        int(f) for f in os.listdir(os.path.join(ckpt, "offsets")) if f.isdigit()
     )
-    # idempotency: re-running one batch's write overwrites, not appends
-    b0 = back.filter("__batch_id = 0").drop("__batch_id")
-    (
-        b0.withColumn("__batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(out)
-    )
+
+
+def _state_partitions(ckpt):
+    root = os.path.join(ckpt, "state", "0")
+    return sorted(int(d) for d in os.listdir(root) if d.isdigit())
+
+
+def test_stateful_stream_starts_at_core_count_and_keeps_checkpoint_width(
+    spark, events_dir, events_batch, tmp_path, monkeypatch
+):
+    """A new query's dedup state runs at defaultParallelism shuffle
+    partitions, not the session's batch width; the caller's session is
+    untouched; a checkpoint begun at another width restarts at it."""
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 32
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
+        q = write_stream_foreach_batch(
+            dedup_events(read_events_stream(spark, events_dir)), out, ckpt
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        q.awaitTermination(120)
+    assert q.exception() is None
+    assert _offset_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == str(cores)
+    assert _state_partitions(ckpt) == list(range(cores))
+    batch_dirs = glob.glob(f"{out}/__batch_id=*")
+    assert batch_dirs
+    for d in batch_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) <= cores
     assert spark.read.parquet(out).count() == events_batch.count()
+
+    # a checkpoint begun at width 8 (a session whose defaultParallelism
+    # is 8) keeps 8 state partitions when restarted on this session.
+    # The source files are time-ordered halves, so no event of the
+    # second half falls behind the first half's watermark.
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "sink8", "ckpt8"))
+    os.makedirs(src)
+    mid = events_batch.orderBy("ts").collect()[500]["ts"]
+
+    def add_file(name, frame):
+        staged = str(tmp_path / f"staged_{name}")
+        frame.coalesce(1).write.parquet(staged)
+        (part,) = glob.glob(f"{staged}/part-*.parquet")
+        shutil.move(part, f"{src}/{name}.parquet")
+
+    def run():
+        q = write_stream_foreach_batch(
+            dedup_events(read_events_stream(spark, src)), out, ckpt
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    add_file("a", events_batch.filter(F.col("ts") < mid))
+    with monkeypatch.context() as m:
+        m.setattr(
+            type(spark.sparkContext),
+            "defaultParallelism",
+            property(lambda self: 8),
+        )
+        run()
+    assert _offset_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == "8"
+    first_last = _last_batch(ckpt)
+    add_file("b", events_batch.filter(F.col("ts") >= mid))
+    run()
+    last = _last_batch(ckpt)
+    assert last > first_last  # the restart ran new batches
+    assert _offset_conf(ckpt, last)["spark.sql.shuffle.partitions"] == "8"
+    assert _state_partitions(ckpt) == list(range(8))
+    # every one of the 8 state partitions wrote the restart's version
+    for p in range(8):
+        assert os.path.exists(f"{ckpt}/state/0/{p}/{last + 1}.delta")
+    got = [r["event_id"] for r in spark.read.parquet(out).collect()]
+    want = {
+        r["event_id"]
+        for r in dedup_events(spark.read.parquet(src)).collect()
+    }
+    assert len(got) == len(set(got))
+    assert set(got) == want
 
 
 def test_transform_with_state_totals(spark, events_dir, events_batch):
@@ -515,7 +623,7 @@ def test_ingest_dedup_stream_indexed_replay_heals(spark, tmp_path):
     last_tag = f"b{last_id:020d}"
     # materialize: the real sink reads the batch from the STREAM
     # source; a lazy read of the very corpus partition the replay
-    # dynamic-overwrites would race its own write
+    # overwrites would race its own write
     last_batch = spark.createDataFrame(
         spark.read.parquet(corpus_path)
         .filter(F.col("__batch_id") == last_id)
@@ -535,7 +643,7 @@ def test_ingest_dedup_stream_indexed_replay_heals(spark, tmp_path):
     assert snapshot() != before  # the poison is visible pre-replay
     # replay the batch exactly as the sink body does (the engine
     # re-invokes foreachBatch with the same batch_id): query excluding
-    # the batch's own tag, dynamic-overwrite corpus, idempotent add
+    # the batch's own tag, the sink's batch-directory write, idempotent add
     index = minhash_index_load(spark, index_dir)
     hits = (
         index.query(
@@ -545,13 +653,7 @@ def test_ingest_dedup_stream_indexed_replay_heals(spark, tmp_path):
         .distinct()
     )
     survivors = last_batch.join(hits, "doc_id", "left_anti")
-    (
-        survivors.withColumn("__batch_id", F.lit(last_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(corpus_path)
-    )
+    _write_batch(survivors, corpus_path, last_id)
     minhash_index_add(
         survivors.select("doc_id", "text"),
         index_dir,
@@ -765,7 +867,7 @@ def test_ingest_containment_stream_replay_heals(spark, tmp_path):
     tag = f"b{last_id:020d}"
     # materialize: the real sink reads the batch from the STREAM
     # source; a lazy read of the very corpus partition the replay
-    # dynamic-overwrites would race its own write
+    # overwrites would race its own write
     last_batch = spark.createDataFrame(
         spark.read.parquet(corpus_path)
         .filter(F.col("__batch_id") == last_id)
@@ -791,13 +893,7 @@ def test_ingest_containment_stream_replay_heals(spark, tmp_path):
     scores = index.query_gated(last_batch, exclude_batch=tag)
     rejected = scores.filter(F.col("containment") > 0.5).select("doc_id")
     survivors = last_batch.join(rejected, "doc_id", "left_anti")
-    (
-        survivors.withColumn("__batch_id", F.lit(last_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(corpus_path)
-    )
+    _write_batch(survivors, corpus_path, last_id)
     cdc_index_add(
         survivors.select("doc_id", "text"),
         index_dir,
@@ -1033,7 +1129,7 @@ def test_ingest_ann_stream_replay_heals(spark, tmp_path):
     last_tag = f"b{last_id:020d}"
     # materialize: the real sink reads the batch from the STREAM
     # source; a lazy read of the very corpus partition the replay
-    # dynamic-overwrites would race its own write
+    # overwrites would race its own write
     last_batch = spark.createDataFrame(
         spark.read.parquet(corpus_path)
         .filter(F.col("__batch_id") == last_id)
@@ -1056,13 +1152,7 @@ def test_ingest_ann_stream_replay_heals(spark, tmp_path):
     )
     assert snapshot() != before  # the poison is visible pre-replay
     # replay the sink body exactly as foreachBatch would
-    (
-        last_batch.withColumn("__batch_id", F.lit(last_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(corpus_path)
-    )
+    _write_batch(last_batch, corpus_path, last_id)
     ivf_index_add(
         last_batch, index_dir, new_corpus_tag=last_tag, batch_id=last_tag
     )

@@ -8,13 +8,15 @@ against the accumulated survivor corpus with
 expansion that emits only new×old pairs — per-batch cost proportional
 to the batch, never corpus²). Only survivors land in the corpus.
 
-Exactly-once: survivors are written under a ``__batch_id`` partition
-with dynamic partition overwrite (the same idempotency pattern as
-``write_stream_foreach_batch``), and a replayed batch dedups only
-against partitions with ``__batch_id`` < its own — partition pruning
-makes that filter a metadata operation — so re-processing a batch
-after a crash reproduces identical output instead of matching against
-its own half-written remains.
+Exactly-once: every sink writes each micro-batch straight to its own
+``__batch_id=<id>`` directory in overwrite mode (``_write_batch``, the
+writer of ``write_stream_foreach_batch``), and a replayed batch dedups
+only against partitions with ``__batch_id`` < its own — partition
+pruning makes that filter a metadata operation — so re-processing a
+batch after a crash reproduces identical output instead of matching
+against its own half-written remains. Every query starts through
+``_start_foreach_batch``, at ``defaultParallelism`` shuffle partitions
+for the batch jobs its sink runs.
 """
 
 from __future__ import annotations
@@ -22,6 +24,11 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from uofi_payroll_etl_main_demo_spark.streaming.events import (
+    _start_foreach_batch,
+    _write_batch,
+)
 
 
 def _read_corpus_before(spark, corpus_path, batch_id, cols):
@@ -103,22 +110,11 @@ def ingest_dedup_stream(
                     **kw,
                 ).select(F.col("new_id").alias(id_col)).distinct()
                 survivors = survivors.join(hits, id_col, "left_anti")
-            (
-                survivors.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
+            _write_batch(survivors, corpus_path, batch_id)
         finally:
             batch_df.unpersist()
 
-    return (
-        stream_docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_docs, sink, checkpoint_dir)
 
 
 def ingest_dedup_stream_indexed(
@@ -144,8 +140,8 @@ def ingest_dedup_stream_indexed(
 
     Exactly-once end to end, all three writes idempotent per batch:
 
-    * corpus rows land under ``__batch_id`` dynamic-overwrite
-      partitions (the module's standard pattern);
+    * corpus rows land in their own ``__batch_id=<id>`` directory
+      (the module's standard pattern);
     * index bands/shingles land under a ``__batch={tag}`` partition via
       ``minhash_index_add``'s dynamic overwrite;
     * the index QUERY excludes the batch's own ``__batch`` partition
@@ -211,13 +207,7 @@ def ingest_dedup_stream_indexed(
                     hits, id_col, "left_anti"
                 ).persist()
                 pinned.append(survivors)
-                (
-                    survivors.withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(corpus_path)
-                )
+                _write_batch(survivors, corpus_path, batch_id)
                 minhash_index_add(
                     survivors.select(id_col, text_col),
                     index_dir,
@@ -230,13 +220,7 @@ def ingest_dedup_stream_indexed(
                 # replay rebuilds; post-build crash → replay takes the
                 # query path, excludes tag, sees an empty corpus, and
                 # minhash_index_add overwrites the same partitions)
-                (
-                    survivors.withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(corpus_path)
-                )
+                _write_batch(survivors, corpus_path, batch_id)
                 minhash_index_build(
                     survivors.select(id_col, text_col),
                     index_dir,
@@ -251,12 +235,7 @@ def ingest_dedup_stream_indexed(
                 df.unpersist()
             batch_df.unpersist()
 
-    return (
-        stream_docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_docs, sink, checkpoint_dir)
 
 
 def ingest_containment_stream(
@@ -291,8 +270,8 @@ def ingest_containment_stream(
     independent of arrival order; see the law's docstring for the
     one-pass-vs-sequential corner.
 
-    Exactly-once by the module's uniform pattern: corpus rows under
-    ``__batch_id`` dynamic-overwrite partitions, index chunks under a
+    Exactly-once by the module's uniform pattern: corpus rows in their
+    own ``__batch_id=<id>`` directory, index chunks under a
     ``__batch={tag}`` partition (``cdc_index_add`` is replay-
     idempotent and its anti-join excludes the batch's own partition),
     and the containment QUERY excludes the batch's own partition, so
@@ -340,13 +319,7 @@ def ingest_containment_stream(
             # the index add — unpinned it would re-chunk per action
             survivors = batch_df.join(rejected, id_col, "left_anti").persist()
             pinned.append(survivors)
-            (
-                survivors.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
+            _write_batch(survivors, corpus_path, batch_id)
             if have_index:
                 cdc_index_add(
                     survivors.select(id_col, text_col),
@@ -370,12 +343,7 @@ def ingest_containment_stream(
                 df.unpersist()
             batch_df.unpersist()
 
-    return (
-        stream_docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_docs, sink, checkpoint_dir)
 
 
 def ingest_ann_stream(
@@ -410,8 +378,8 @@ def ingest_ann_stream(
     Exactly-once by the module's uniform pattern, both writes
     idempotent per batch:
 
-    * corpus rows land under ``__batch_id`` dynamic-overwrite
-      partitions (the row store the rerank/serving path reads);
+    * corpus rows land in their own ``__batch_id=<id>`` directory
+      (the row store the rerank/serving path reads);
     * index rows land under ``centroid=*/__batch={tag}`` partitions
       via ``ivf_index_add``'s dynamic overwrite — a replayed batch
       re-assigns the SAME vectors to the same frozen centroids and
@@ -462,13 +430,7 @@ def ingest_ann_stream(
         tag = f"b{batch_id:020d}"
         batch = batch_df.select(id_col, vec_col).persist()
         try:
-            (
-                batch.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
+            _write_batch(batch, corpus_path, batch_id)
             if _fs_exists(spark, f"{index_dir}/meta"):
                 add = {
                     "ivf": ivf_index_add,
@@ -522,12 +484,7 @@ def ingest_ann_stream(
         finally:
             batch.unpersist()
 
-    return (
-        stream_vectors.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_vectors, sink, checkpoint_dir)
 
 
 def ingest_media_dedup_stream(
@@ -551,8 +508,8 @@ def ingest_media_dedup_stream(
     The corpus stores ``(id, dhash)`` SIGNATURES, not payloads — prior
     batches are never re-decoded, and the corpus side of each banding
     join is a narrow (long, long) scan no matter how large the media
-    bytes were. Exactly-once via the same ``__batch_id`` dynamic
-    partition overwrite + replay-safe ``<` batch`` filter as the text
+    bytes were. Exactly-once via the same per-batch ``__batch_id``
+    directory overwrite + replay-safe ``< batch`` filter as the text
     ingester.
     """
     from uofi_payroll_etl_main_demo_spark.ext.clusters import dedup_survivors
@@ -600,22 +557,11 @@ def ingest_media_dedup_stream(
                     .distinct()
                 )
                 survivors = survivors.join(hits, id_col, "left_anti")
-            (
-                survivors.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
+            _write_batch(survivors, corpus_path, batch_id)
         finally:
             sigs.unpersist()
 
-    return (
-        stream_media.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_media, sink, checkpoint_dir)
 
 
 def ingest_constrained_stream(
@@ -637,9 +583,9 @@ def ingest_constrained_stream(
     is appended as the audit trail. The data-quality circuit breaker
     in front of a training corpus, as a stream.
 
-    Exactly-once: all three sinks write under a ``__batch_id``
-    partition with dynamic partition overwrite (the module's standard
-    idempotency pattern), so a replayed batch reproduces identical
+    Exactly-once: all three sinks write each batch to its own
+    ``__batch_id=<id>`` directory in overwrite mode (the module's
+    standard idempotency pattern), so a replayed batch reproduces identical
     corpus, quarantine and report partitions instead of duplicating.
     Admission is row-level and needs row rules; passing only
     aggregate-kind rules (``unique``/``fk``) raises — they still
@@ -663,28 +609,14 @@ def ingest_constrained_stream(
                 (corpus_path, batch_df.filter(admit)),
                 (quarantine_path, batch_df.filter(~admit)),
             ):
-                (
-                    frame.withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(path)
-                )
+                _write_batch(frame, path, batch_id)
             if report_path is not None:
-                (
-                    check_data_constraints(batch_df, rules)
-                    .withColumn("__batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(report_path)
+                _write_batch(
+                    check_data_constraints(batch_df, rules),
+                    report_path,
+                    batch_id,
                 )
         finally:
             batch_df.unpersist()
 
-    return (
-        stream_docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_docs, sink, checkpoint_dir)

@@ -10,7 +10,13 @@ Scale posture: windowed aggregation state is bounded by the watermark
 (late data beyond it is dropped and its state evicted); dedup state
 likewise via ``dropDuplicatesWithinWatermark``. The shuffle key is
 (window, event_type) / user_id — high-cardinality enough to spread, and
-AQE handles residual skew in batch mode.
+AQE handles residual skew in batch mode. Spark turns AQE off in a
+streaming query, so every ``foreachBatch`` query of the package starts
+through :func:`_start_foreach_batch` at ``defaultParallelism`` shuffle
+partitions (the state width) rather than the session's batch width.
+
+Exactly-once sinks write each micro-batch straight to its own
+``__batch_id=<id>`` directory in overwrite mode (:func:`_write_batch`).
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from uofi_payroll_etl_main_demo_spark.session import scoped_conf
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -202,6 +210,46 @@ def event_type_rollup(events: DataFrame, watermark: str = "30 minutes") -> DataF
     )
 
 
+def _write_batch(batch_df: DataFrame, path: str, batch_id: int) -> None:
+    """Write one micro-batch straight to ``<path>/__batch_id=<id>/``.
+
+    Overwrite mode on the batch's own directory: a replayed batch
+    replaces exactly its earlier attempt and touches no other batch,
+    and nothing lists or rewrites the rest of the partition tree. A
+    crash mid-write leaves at most this batch's directory partial, and
+    the batch is uncommitted, so its replay replaces it. The
+    files carry no ``__batch_id`` column; a read of ``path`` recovers
+    it from the directory name, as for a ``partitionBy`` layout.
+    """
+    batch_df.write.mode("overwrite").parquet(f"{path}/__batch_id={batch_id}")
+
+
+def _start_foreach_batch(
+    stream: DataFrame, sink, checkpoint: str, available_now: bool = True
+):
+    """Start ``stream`` into the ``foreachBatch`` function ``sink``.
+
+    The query starts with ``spark.sql.shuffle.partitions`` set to
+    ``defaultParallelism``: Spark disables AQE in a streaming query, so
+    the session's batch shuffle width would otherwise run as that many
+    state-store tasks and state files per operator on every trigger.
+    The conf is set only around ``start()``, which clones the stream's
+    session synchronously, so the caller's session is back at its own
+    width when this returns. Spark records the width in the
+    checkpoint's offset log, and a restarted checkpoint keeps the
+    width it began with.
+    """
+    spark = stream.sparkSession
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    width = str(spark.sparkContext.defaultParallelism)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
+        return writer.start()
+
+
 def write_stream_foreach_batch(
     stream: DataFrame,
     path: str,
@@ -209,35 +257,31 @@ def write_stream_foreach_batch(
     available_now: bool = True,
 ):
     """Exactly-once parquet sink via ``foreachBatch`` + idempotent
-    batch-id partition overwrite.
+    per-batch directory overwrite.
 
     Structured Streaming guarantees at-least-once delivery to
     ``foreachBatch``; exactly-once lands on the SINK being idempotent
-    per batch. The standard pattern: write each micro-batch into a
-    ``__batch_id=<id>`` partition with DYNAMIC partition overwrite — a
-    replayed batch rewrites its own partition instead of duplicating
+    per batch. Each micro-batch is written by :func:`_write_batch` to
+    its own ``__batch_id=<id>`` directory in overwrite mode, so a
+    replayed batch rewrites its own directory instead of duplicating
     rows. Combined with the checkpoint (which makes batch ids stable
     across restarts), the output is exactly-once at any scale.
 
+    The query starts at the state width of :func:`_start_foreach_batch`
+    (``defaultParallelism`` shuffle partitions). Migration: an existing
+    checkpoint keeps the width recorded in its offset log (its state
+    store is partitioned by it), so a query begun at the session's
+    batch width keeps that width on restart; moving such a query to
+    the new width means starting it on a fresh checkpoint.
+
     Returns the started StreamingQuery (caller awaits termination).
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
+    return _start_foreach_batch(
+        stream,
+        lambda batch_df, batch_id: _write_batch(batch_df, path, batch_id),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 USER_TOTALS_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value DOUBLE"
