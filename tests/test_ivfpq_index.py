@@ -75,12 +75,28 @@ def _build(emb, idx, **kw):
     ivfpq_index_build(emb, idx, **kw)
 
 
+@pytest.fixture(scope="module")
+def ivfpq4(spark, sf_dir, tmp_path_factory):
+    """IVF-PQ store (4 lists) over the embeddings, shared by the tests
+    that only read it."""
+    idx = str(tmp_path_factory.mktemp("ivfpq4") / "ivfpq")
+    _build(_emb(spark, sf_dir), idx)
+    return idx
+
+
+@pytest.fixture(scope="module")
+def ivfpq8(spark, sf_dir, tmp_path_factory):
+    """IVF-PQ store (8 lists), shared by the tests that only read it."""
+    idx = str(tmp_path_factory.mktemp("ivfpq8") / "ivfpq")
+    _build(_emb(spark, sf_dir), idx, n_lists=8)
+    return idx
+
+
 def test_ivfpq_roundtrip_exact_at_full_probe_full_margin(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivfpq4
 ):
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx)
     loaded = ivfpq_index_load(spark, idx)
     got = [
         (r["vec_id"], round(r["score"], 9))
@@ -96,14 +112,13 @@ def test_ivfpq_roundtrip_exact_at_full_probe_full_margin(
 
 
 def test_ivfpq_adc_plan_prunes_list_partitions_and_reads_only_codes(
-    spark, sf_dir, tmp_path
+    spark, ivfpq4
 ):
     """The ADC-only serve (no rerank) must touch NOTHING but the codes
     table, and the probe filter must prune list PARTITIONS at the
     parquet scan — the composed store's whole point: nprobe/n_lists of
     the files, at m ints per vector."""
-    idx = str(tmp_path / "ivfpq")
-    _build(_emb(spark, sf_dir), idx)
+    idx = ivfpq4
     out = ivfpq_index_load(spark, idx).search(QV, k=10, nprobe=2)
     report = inspect_plan(out)
     assert report.scans, "expected at least one parquet scan"
@@ -116,10 +131,9 @@ def test_ivfpq_adc_plan_prunes_list_partitions_and_reads_only_codes(
     assert "centroid" in plan[lo : lo + 200]
 
 
-def test_ivfpq_filtered_search_exact(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivfpq")
+def test_ivfpq_filtered_search_exact(spark, sf_dir, ivfpq4):
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx)
     loaded = ivfpq_index_load(spark, idx)
     allowed = emb.filter(F.col("label") == 2).select("vec_id")
     got = [
@@ -142,13 +156,12 @@ def test_ivfpq_filtered_search_exact(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_ivfpq_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
+def test_ivfpq_batch_matches_single_query_loop(spark, sf_dir, ivfpq4):
     """The batched serve must equal the single-query loop per query at
     matching full-probe/full-margin params (ranks live on the shared
     unrounded exact-rerank score, so the paths are bit-identical)."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx)
     loaded = ivfpq_index_load(spark, idx)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -176,13 +189,12 @@ def test_ivfpq_batch_matches_single_query_loop(spark, sf_dir, tmp_path):
         assert got == single, f"query {qid} diverged"
 
 
-def test_ivfpq_batch_string_query_ids_ride_the_scan(spark, sf_dir, tmp_path):
+def test_ivfpq_batch_string_query_ids_ride_the_scan(spark, sf_dir, ivfpq4):
     """The query id rides the pruned ADC scan and the rerank tail as a
     column of its own: a string id keeps its type, and each query's
     rows equal the rows the same batch returns under its numeric id."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx)
     loaded = ivfpq_index_load(spark, idx)
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -207,12 +219,11 @@ def test_ivfpq_batch_string_query_ids_ride_the_scan(spark, sf_dir, tmp_path):
         assert got == want and len(got) == 20
 
 
-def test_ivfpq_batch_pruned_probe_partition_filter(spark, sf_dir, tmp_path):
+def test_ivfpq_batch_pruned_probe_partition_filter(spark, sf_dir, ivfpq8):
     """Partial-probe BATCHED serving (ADC only): the codes scan carries
     the probe union as a static partition filter."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq8
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=8)
     loaded = ivfpq_index_load(spark, idx)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -228,7 +239,7 @@ def test_ivfpq_batch_pruned_probe_partition_filter(spark, sf_dir, tmp_path):
 
 
 def test_ivfpq_residual_codes_beat_flat_pq_reconstruction(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, ivfpq4
 ):
     """The residual claim, measured: at the SAME codebook budget
     (m=8 × 16 codewords, same trainer, same sample law), decoding the
@@ -239,9 +250,8 @@ def test_ivfpq_residual_codes_beat_flat_pq_reconstruction(
     import numpy as np
 
     emb = _emb(spark, sf_dir)
-    ivfpq_dir = str(tmp_path / "ivfpq")
+    ivfpq_dir = ivfpq4
     pq_dir = str(tmp_path / "pq")
-    _build(emb, ivfpq_dir)
     pq_index_build(emb, pq_dir, m=8, n_centroids=16, corpus_tag="t1")
 
     V = {
@@ -384,17 +394,16 @@ def test_ivfpq_ensure_loads_without_rebuild_then_rebuilds_on_change(
     assert _index_mtimes(idx) != mt, "tag change must rebuild"
 
 
-def test_ivfpq_stats_cover_corpus(spark, sf_dir, tmp_path):
-    idx = str(tmp_path / "ivfpq")
+def test_ivfpq_stats_cover_corpus(spark, sf_dir, ivfpq4):
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx)
     stats = ivfpq_index_stats(spark, idx).collect()
     assert sum(r["n_vectors"] for r in stats) == emb.count()
     assert {r["centroid"] for r in stats} <= set(range(4))
 
 
 def test_ivfpq_filtered_auto_widen_reaches_exact_brute_force(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivfpq8
 ):
     """A selective predicate can starve BOTH reductions — the probe
     set (nearest lists exhausted) and the ADC candidate cut (allowed
@@ -402,9 +411,8 @@ def test_ivfpq_filtered_auto_widen_reaches_exact_brute_force(
     the candidate budget once every list is probed, degrading to the
     exact filtered brute force; with k above the match count the full
     degrade path is forced."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq8
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=8)
     loaded = ivfpq_index_load(spark, idx)
     allowed = emb.filter(F.col("vec_id") % 101 == 7).select("vec_id")
     n_allowed = allowed.count()
@@ -690,15 +698,14 @@ def test_semantic_dedup_index_matches_bruteforce_and_flags_both_ways(
     assert flags == {True, False}
 
 
-def test_ivfpq_batched_auto_widen_degrades_to_exact(spark, sf_dir, tmp_path):
+def test_ivfpq_batched_auto_widen_degrades_to_exact(spark, sf_dir, ivfpq8):
     """Batched auto-widen under an extreme predicate: every starved
     query re-runs together with doubled nprobe, then the ADC candidate
     budget lifts once every list is probed — per query the result must
     equal the exact filtered brute force (k above the match count
     forces the full two-leg path for EVERY query)."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq8
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=8)
     loaded = ivfpq_index_load(spark, idx)
     allowed = emb.filter(F.col("vec_id") % 101 == 7).select("vec_id")
     n_allowed = allowed.count()
@@ -733,15 +740,14 @@ def test_ivfpq_batched_auto_widen_degrades_to_exact(spark, sf_dir, tmp_path):
         assert len(got) == n_allowed
 
 
-def test_ivfpq_zero_norm_query_consistent_no_rows(spark, sf_dir, tmp_path):
+def test_ivfpq_zero_norm_query_consistent_no_rows(spark, sf_dir, ivfpq4):
     """Zero-norm queries have undefined cosine: the single-query path
     emits NO rows (never k zero-ADC rows), matching the batched paths'
     live-mask skip — and under batched auto_widen the dead query is
     excluded from the starved set, so it cannot force the full
     widen-to-exhaustion sequence while the live queries serve."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=4)
     loaded = ivfpq_index_load(spark, idx)
     zq = [0.0] * 64
     assert loaded.search(zq, k=5).count() == 0
@@ -763,13 +769,12 @@ def test_ivfpq_zero_norm_query_consistent_no_rows(spark, sf_dir, tmp_path):
                for q in (0, 1))
 
 
-def test_ivfpq_search_batch_pages_over_cap_batches(spark, sf_dir, tmp_path):
+def test_ivfpq_search_batch_pages_over_cap_batches(spark, sf_dir, ivfpq4):
     """Over-cap composed-store batches page themselves in bounded
     chunks (one job per chunk, union of results) — identical to the
     under-cap serve of the same batch at full probe + full margin."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=4)
     loaded = ivfpq_index_load(spark, idx)
     queries = emb.filter(F.col("vec_id") < 9).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -825,7 +830,7 @@ def test_ivfpq_build_validates_before_invalidating(spark, sf_dir, tmp_path):
 
 
 def test_ivfpq_auto_widen_composes_with_chunk_paging(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivfpq8
 ):
     """The relational widen loop re-serves starved queries through the
     same batch entrypoint that pages over-cap frames — compose both:
@@ -837,9 +842,8 @@ def test_ivfpq_auto_widen_composes_with_chunk_paging(
         brute_force_top_k,
     )
 
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq8
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=8)
     loaded = ivfpq_index_load(spark, idx)
     allowed = emb.filter(F.col("vec_id") % 101 == 7).select("vec_id")
     n_allowed = allowed.count()
@@ -877,14 +881,13 @@ def test_ivfpq_auto_widen_composes_with_chunk_paging(
 
 
 def test_ivfpq_all_zero_norm_widen_batch_returns_empty(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, ivfpq4
 ):
     """A NON-empty batch whose every query is zero-norm must return an
     empty frame under auto_widen (not raise the LUT paths' empty-batch
     refusal, and not spin widening rounds)."""
-    idx = str(tmp_path / "ivfpq")
+    idx = ivfpq4
     emb = _emb(spark, sf_dir)
-    _build(emb, idx, n_lists=4)
     loaded = ivfpq_index_load(spark, idx)
     dead = spark.createDataFrame(
         [(7, [0.0] * 64), (8, [0.0] * 64)],

@@ -114,6 +114,20 @@ def test_mode_by_group_deterministic_tiebreak(spark):
     assert got == {"k1": "x", "k2": "a"}
 
 
+def test_mode_by_group_null_is_a_value(spark):
+    # NULL counts like any value and sorts first on ties; a plain
+    # F.mode(v) skips NULLs and would answer 'y' / 'a' for k1 / k2
+    df = spark.createDataFrame(
+        [("k1", None), ("k1", None), ("k1", "y"),  # NULL most frequent
+         ("k2", None), ("k2", "a"),  # NULL ties with 'a'
+         ("k3", None), ("k3", None),  # all NULL
+         ("k4", "b"), ("k4", "a"), ("k4", "b"), ("k4", "a"), ("k4", "c")],
+        "k string, v string",
+    )
+    got = {r["k"]: r["mode_v"] for r in mode_by_group(df, "k", "v").collect()}
+    assert got == {"k1": None, "k2": None, "k3": None, "k4": "a"}
+
+
 def test_mode_lookup_map(spark):
     df = spark.createDataFrame(
         [("k1", "x"), ("k1", "x"), ("k1", "y")], "k string, v string"

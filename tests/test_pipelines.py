@@ -15,6 +15,7 @@ from uofi_payroll_etl_main_demo_spark.pipelines import (
     cpa_pipeline,
     pua_pipeline,
 )
+from uofi_payroll_etl_main_demo_spark.plans import inspect_plan
 from uofi_payroll_etl_main_demo_spark.validate import FreshnessError
 
 
@@ -200,6 +201,46 @@ def test_cpa_pipeline(spark, cpa_inputs, lookups):
     assert r["TE M"] == "W"  # TE M arrives via the UIN Job merge
     assert r["Time Entry"] == "Web Time Entry"  # mode of W (ref 647-650)
     assert r["College Code"] == "KY" and r["College Name"] == "Engineering"
+
+
+def test_cpa_dedup_cascade_one_survivor_per_key(spark, lookups):
+    # keep-first by UIN Job, then by TRAN_ID, under the default order
+    # (TRAN_ID, UIN Job); TRAN_ID is not an output column, so each one
+    # carries its own "Seq #"
+    ts_org, ts_dept, overtime, te_m = lookups
+    dup = _cpa_rows("2024-03-01")  # in BW AND in MN, identical
+    late = dict(dup, UIN="200", JOB="2", TRAN_ID="T5", PAY_SEQ="5",
+                HRLY_RATE="20.00")
+    early = dict(late, TRAN_ID="T4", PAY_SEQ="4", HRLY_RATE="19.00")
+    shared_a = dict(dup, UIN="300", JOB="3", TRAN_ID="T9", PAY_SEQ="9")
+    shared_b = dict(shared_a, UIN="301")  # same TRAN_ID, other UIN Job
+    schema = ", ".join(f"`{c}` string" for c in CPA_EXPECTED_COLUMNS)
+    mk = lambda rows: spark.createDataFrame(
+        [tuple(r[c] for c in CPA_EXPECTED_COLUMNS) for r in rows], schema
+    )
+    bw, mn = mk([dup, late, shared_a]), mk([dup, early, shared_b])
+    out = cpa_pipeline(bw, mn, ts_org, ts_dept, overtime, te_m,
+                       fiscal_year_end=2024, strict=False)
+    got = sorted((r["UIN"], r["Job Number"], r["Seq #"]) for r in out.collect())
+    assert got == [("100", "1", "0"), ("200", "2", "4"), ("300", "3", "9")]
+
+
+def test_payroll_plans_dedup_broadcast_dims_without_shuffles(
+    spark, pua_raw, cpa_inputs, lookups
+):
+    # Each broadcast dim dedups in the one task that feeds its
+    # broadcast; what shuffles is the TE mode (1), the keep-first
+    # dedups (PUA 1, CPA 2), nothing else. Joins are unchanged: PUA 4
+    # and CPA 5 broadcast joins, each named twice in the formatted plan.
+    ts_org, ts_dept, overtime, te_m = lookups
+    pua = inspect_plan(pua_pipeline(pua_raw, ts_org, ts_dept, overtime, te_m))
+    cpa = inspect_plan(
+        cpa_pipeline(*cpa_inputs, ts_org, ts_dept, overtime, te_m,
+                     fiscal_year_end=2024, strict=False)
+    )
+    assert (pua.exchanges, pua.broadcast_joins) == (2, 8)
+    assert (cpa.exchanges, cpa.broadcast_joins) == (3, 10)
+    assert pua.sort_merge_joins == cpa.sort_merge_joins == 0
 
 
 def test_cpa_schema_contract_enforced(spark, cpa_inputs, lookups):

@@ -2,21 +2,19 @@
 
 The one non-trivial aggregate in the reference is MODE-per-group with a
 deterministic fallback (``mode_map``, etl_payroll_pipeline_demo.py:
-224-226, applied at 311-319 and 633-637). ``F.mode`` (Spark ≥ 3.4)
-breaks ties arbitrarily, so the engine builds mode as
-count → window → row_number with an explicit tie-break on the value —
-deterministic on any cluster.
+224-226, applied at 311-319 and 633-637). The engine computes it as one
+``F.mode(..., deterministic=True)`` aggregate, whose ties go to the
+smallest value — deterministic on any cluster.
 
-Scale shape: ``groupBy(key, value).count()`` does a map-side partial
-aggregate BEFORE the shuffle, so the window then runs over one row per
+Scale shape: ``mode`` builds its per-group value→count map map-side,
+BEFORE the shuffle, so the shuffle carries one entry per
 (key, value) pair — cardinality of the value domain, not of the fact
-table. This is the 100 TB-safe way to compute mode (SURVEY.md §7.3
-hard part 4).
+table (SURVEY.md §7.3 hard part 4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -28,17 +26,15 @@ def mode_by_group(
 ) -> DataFrame:
     """Most frequent ``value`` per ``key``; ties broken by smallest value.
 
-    Returns one row per key: ``key..., out_name``.
+    Returns one row per key: ``key..., out_name``. NULL counts as a
+    value and is the smallest: a key whose most frequent value is NULL,
+    or ties with it, maps to NULL. (``mode`` skips NULL inputs, so the
+    value rides in a one-field struct, which is never NULL.)
     """
     keys = [key] if isinstance(key, str) else list(key)
     out_name = out_name or f"mode_{value}"
-    counted = df.groupBy(*keys, value).agg(F.count(F.lit(1)).alias("__n"))
-    w = Window.partitionBy(*keys).orderBy(F.desc("__n"), F.asc(value))
-    return (
-        counted.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*keys, F.col(value).alias(out_name))
-    )
+    top = F.mode(F.struct(value), deterministic=True)[value]
+    return df.groupBy(*keys).agg(top.alias(out_name))
 
 
 def mode_lookup_map(

@@ -9,7 +9,8 @@ here encode that shape once:
   join (reference's manual fan-out guard, lines 290/294/305/...),
 - small dimensions get an explicit ``broadcast`` hint (they are
   KB–MB-scale lookups; at 100 TB fact scale the broadcast-hash join
-  avoids shuffling the fact table entirely),
+  avoids shuffling the fact table entirely) and are deduplicated in
+  the one task that feeds the broadcast, with no shuffle of their own,
 - an optional row-count-preservation check ports ``safe_merge_left``
   (lines 233-240).
 
@@ -48,6 +49,9 @@ def _prepare_dim(
     if dedup:
         # Reference guards every merge with drop_duplicates() on the
         # projected dimension (fan-out prevention, SURVEY.md §2.3 J8).
+        # A broadcast dim arrives as one partition (a broadcast is
+        # collected whole anyway), which already satisfies the
+        # dedup's clustering: no shuffle, no extra job.
         # Dedup on the KEYS (not the full row) so a dimension with two
         # payload variants for one key still cannot multiply the fact
         # side; which payload survives is made deterministic by
@@ -100,6 +104,8 @@ def safe_left_join(
     else:
         fact_keys = dim_keys = list(on)
 
+    if broadcast_dim:  # one task feeds the broadcast (see _prepare_dim)
+        dim = dim.coalesce(1)
     dim_prepared = _prepare_dim(dim, dim_keys, payload, dedup=dedup_dim)
     if broadcast_dim:
         dim_prepared = F.broadcast(dim_prepared)

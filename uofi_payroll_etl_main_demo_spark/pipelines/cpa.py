@@ -4,9 +4,9 @@ union-by-name → date parse/bounds → fiscal-year filter → schema
 contract → derive/validate → enrich → filter → dedup cascade →
 normalize → split → rename/project.
 
-The mid-pipeline assertions (freshness 508-512, schema contract
-522-554, format check 564-581) are driver actions over tiny aggregates
-between lazy segments — the only forced evaluations before the sink.
+The freshness ``min`` (508-512) is the only forced evaluation before
+the sink; the schema contract (522-554) reads only the schema, and the
+warn-only format rule (564-581) is left to the constraints gate.
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ from uofi_payroll_etl_main_demo_spark.operators.dedup import dedup_keep_first
 from uofi_payroll_etl_main_demo_spark.operators.joins import safe_left_join
 from uofi_payroll_etl_main_demo_spark.operators.setops import union_by_name
 from uofi_payroll_etl_main_demo_spark.validate.contracts import (
-    check_format,
     check_freshness,
     check_schema_contract,
 )
@@ -102,7 +101,7 @@ def cpa_pipeline(
 
     ``strict=True`` runs the reference's hard assertions (freshness
     raise 508-512, exact schema contract 530-554); format violations
-    are counted but never fatal (reference warns and proceeds, 564-581).
+    are never fatal (reference warns and proceeds, 564-581).
     """
     # -- union by name (reference 487-491, U1) --
     df = union_by_name(clean_column_names(cert_bw), clean_column_names(cert_mn))
@@ -129,8 +128,6 @@ def cpa_pipeline(
     )
     df = df.withColumn("TS-Org Code", concat_key("JOB_TS_COAS", "JOB_TS_ORGN"))
     df = df.withColumn("Dept TS-Org", F.substring("TS-Org Code", 1, 5))
-    check_format(df, "TS-Org Code", r"^\d-\d{6}$")  # telemetry, non-fatal
-    check_format(df, "Dept TS-Org", r"^\d-\d{3}$")
     df = df.withColumn(
         "UIN Job", concat_key(ensure_string("UIN"), ensure_string("JOB"))
     )
@@ -197,11 +194,11 @@ def cpa_pipeline(
             "Job Detail E-Class Long Desc", "E-Class Description"
         )
 
-    # -- filter + dedup cascade, reference order (666-695): ACTION
-    # filter -> full-row distinct -> keep-first by UIN Job -> string
-    # normalize -> full-row distinct -> keep-first by TRAN_ID --
+    # -- filter + dedup cascade (666-695): ACTION filter -> keep-first
+    # by UIN Job -> string normalize -> keep-first by TRAN_ID. Each
+    # keep-first subsumes the reference's full-row distinct before it
+    # (667, 688): identical rows share the key and cannot be told apart --
     df = df.filter(F.col("ACTION") == F.lit("3 - Apply"))
-    df = df.dropDuplicates()  # full-row distinct (667)
     ob = order_by or [F.asc("TRAN_ID"), F.asc("UIN Job")]
     df = dedup_keep_first(df, ["UIN Job"], ob)  # keep-first (668)
 
@@ -226,8 +223,6 @@ def cpa_pipeline(
             for f in df.schema.fields
         ]
     )
-
-    df = df.dropDuplicates()  # full-row distinct again (688)
     df = dedup_keep_first(df, ["TRAN_ID"], ob)  # keep-first (690-695)
 
     # -- COLLEGE split (reference 698-706, F6) --
